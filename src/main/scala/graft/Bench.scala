@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE summary JSON line (driver contract).

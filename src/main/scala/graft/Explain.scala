@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print formatted physical plans for selected queries —
   * `runMain graft.Explain q06_filter_pushdown q40_minhash_neardups ...`

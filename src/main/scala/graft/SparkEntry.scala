@@ -820,17 +820,12 @@ object SparkEntry {
       // Separate aggregation passes joined on the (3-row) group key: mixing
       // count_distinct with the percentile object-aggregates in one agg
       // makes Catalyst Expand every input row through the object hash
-      // aggregate (measured ~2.5x slower than clean passes). r22: the
-      // exact percentiles moved to the SPREAD quantile shape — measured
-      // 2.01 -> 1.83 s at sf0.1 (its range stages overlap the other two
-      // aggregation passes better than the 3-task window did) AND it is
-      // the group-count-independent 100 TB shape.
+      // aggregate (measured ~2.5x slower than clean passes).
       val distincts = li.groupBy(col("l_returnflag")).agg(
         count_distinct(col("l_partkey")).as("n_parts"),
         approx_count_distinct(col("l_partkey")).as("hll_parts"))
-      // exact side via the sort-based distributed quantile (identical
-      // interpolation to percentile(), no per-group value buffering) —
-      // the scale path, not just a harness
+      // exact side via the sort-based distributed quantile: its range
+      // sort spreads the 3 groups over every partition
       val pctls = graft.ops.Quantiles.exactQuantilesSpread(
         li, "l_extendedprice", Seq("l_returnflag"),
         Seq(0.5, 0.99), Seq("p50_exact", "p99_exact"))
@@ -1080,17 +1075,16 @@ object SparkEntry {
       val fresh = verbTwins.union(semTwins).union(cleanDocs)
       // the two reference prepares are INDEPENDENT eager builds over the
       // (already-materialized — the centroid collect forced it) cached
-      // corpus: overlap them from a second driver thread (guide §2.6 —
-      // actions are only sequential because the driver calls them
-      // sequentially), so the semantic tier's assignment jobs back-fill
+      // corpus: overlapped, the semantic tier's assignment jobs back-fill
       // the verbatim tier's shingling stages instead of queueing after
-      // them (both builds sat on the critical path before).
-      val vPrepF = scala.concurrent.Future(Dedup.crossPrepare(corpus))(
-        scala.concurrent.ExecutionContext.global)
-      val sPrep = graft.dedup.SemDeDup.crossSemanticPrepare(
-        corpus.select(col("doc_id").as("id"), col("vec")), centroids)
-      val vPrep = scala.concurrent.Await.result(
-        vPrepF, scala.concurrent.duration.Duration.Inf)
+      // them. A failed build leaves neither prepare nor the corpus pinned.
+      val (vPrep, sPrep) =
+        try graft.util.Caching.overlapped("q166_cross_all")(
+          Dedup.crossPrepare(corpus),
+          graft.dedup.SemDeDup.crossSemanticPrepare(
+            corpus.select(col("doc_id").as("id"), col("vec")), centroids))(
+          _.release(), _.release())
+        catch { case t: Throwable => corpus.unpersist(blocking = false); throw t }
       try graft.dedup.CrossSweep.removeCrossAll(fresh, vPrep, sPrep,
           jaccardThreshold = 0.5, cosThreshold = 0.99)
         .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
@@ -1427,14 +1421,8 @@ object SparkEntry {
     // — the robust-stats composition over Quantiles ----
     "q92_winsorized" -> ((s, dir) => {
       val li = Tables.lineitem(s, dir)
-      // SPREAD-shape quantiles (r22): l_returnflag has 3 groups, so the
-      // window variant sorts ~1/3 of lineitem through ONE task — the
-      // canonical 100 TB wall (the driver logs the single-partition window
-      // warning for it). The range-partitioned rank shape costs a bounded
-      // 1.35 -> 1.66 s at sf0.1 (5-rep medians, 32c) for parallelism
-      // independent of group count; q44's identical switch measured
-      // FASTER (2.01 -> 1.83 s), so the overhead is stage latency, not
-      // data volume.
+      // 3 groups: a per-group window would sort ~1/3 of lineitem through
+      // ONE task; the range sort spreads them over every partition
       val bounds = graft.ops.Quantiles.exactQuantilesSpread(
         li, "l_extendedprice", Seq("l_returnflag"), Seq(0.01, 0.99), Seq("lo", "hi"))
       li.join(broadcast(bounds), "l_returnflag")
@@ -1456,8 +1444,8 @@ object SparkEntry {
         .orderBy(col("id_a"), col("id_b"))
     }),
 
-    // ---- LAG window: day-over-day revenue delta. r22: the global-order
-    // LAG rides a range-partitioned rank + rank−1 self-join instead of a
+    // ---- LAG window: day-over-day revenue delta. The global-order LAG
+    // rides a range-partitioned rank + rank−1 self-join instead of a
     // partition-less WindowExec — the daily grain bounds the frame either
     // way, but no single task ever has to hold the whole series ----
     "q95_dod_change" -> ((s, dir) => {
@@ -1472,10 +1460,10 @@ object SparkEntry {
         .orderBy(col("dt"))
     }),
 
-    // ---- NTILE under a total order. r22: quartiles as rank arithmetic
-    // over a range-partitioned global row number (Ranks.ntileFromRank,
-    // pinned against ntile() by RanksSpec) — the ntile() window previously
-    // moved EVERY order row through ONE task (partition-less WindowExec),
+    // ---- NTILE under a total order: quartiles as rank arithmetic over a
+    // range-partitioned global row number (Ranks.ntileFromRank, pinned
+    // against ntile() by RanksSpec and RangeSortSpec) — an ntile() window
+    // moves EVERY order row through ONE task (partition-less WindowExec),
     // the canonical 100 TB wall ----
     "q96_ntile" -> ((s, dir) => {
       val ranked = graft.ops.Ranks.withGlobalRowNumber(
@@ -1515,10 +1503,8 @@ object SparkEntry {
     // absolute deviations) ----
     "q100_mad" -> ((s, dir) => {
       val li = Tables.lineitem(s, dir)
-      // both passes on the SPREAD shape (r22, q92's argument — 3 groups on
-      // lineitem): 2.11 -> 2.68 s at sf0.1 buys group-count-independent
-      // parallelism on both sorts; the two calls are inherently sequential
-      // (deviations need the medians)
+      // two range-sorted passes (q92's argument), inherently sequential:
+      // the deviations need the medians
       val med = graft.ops.Quantiles.exactQuantilesSpread(
         li, "l_extendedprice", Seq("l_returnflag"), Seq(0.5), Seq("med"))
       val dev = li.join(broadcast(med), "l_returnflag")
@@ -4211,7 +4197,7 @@ object SparkEntry {
         |  CAST(list_max(list_transform(qv, x -> ABS(x))) AS BIGINT) AS q_max_abs
         |FROM q ORDER BY vec_id""".stripMargin,
 
-    // q92: quantile_cont is the same type-7 interpolation as exactQuantiles
+    // q92: quantile_cont is the same type-7 interpolation as exactQuantilesSpread
     // (pinned by q44/QuantilesSpec); winsorized values sum through
     // DECIMAL(18,4).
     "q92_winsorized" ->
@@ -4266,7 +4252,7 @@ object SparkEntry {
         |ORDER BY o_custkey""".stripMargin,
 
     // q100: quantile_cont twice — same type-7 interpolation as
-    // exactQuantiles on both passes.
+    // exactQuantilesSpread on both passes.
     "q100_mad" ->
       """WITH m AS (SELECT l_returnflag, quantile_cont(l_extendedprice, 0.5) AS med
         |           FROM lineitem GROUP BY 1),

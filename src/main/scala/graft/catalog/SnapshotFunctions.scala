@@ -3,7 +3,6 @@ package graft.catalog
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The snapshot catalog's V2 function registry — one function per
   * partition transform (`bucket`, `years`/`months`/`days`/`hours`,

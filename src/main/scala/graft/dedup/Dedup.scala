@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 
@@ -249,27 +249,14 @@ object Dedup {
       threshold: Double = 0.5,
       seed: Long = 42L,
       shingleK: Int = 3): DataFrame = {
-    // r22: the reference prepare and the arriving side's shingling are
-    // independent eager builds — overlap them (guide §2.6): the prepare
-    // runs from a second driver thread while this thread forces the
-    // arrivals' shingle cache, so neither waits on the other's jobs. Both
-    // failure paths release every pinned cache before rethrowing.
-    val prepF = scala.concurrent.Future(
-      crossPrepare(reference, textCol, idCol, k, bands, seed, shingleK))(
-      scala.concurrent.ExecutionContext.global)
-    val hashedNew = shingleSetsOf(newDocs, textCol, idCol, shingleK).persist()
-    val prep =
-      try {
-        hashedNew.count()
-        scala.concurrent.Await.result(prepF, scala.concurrent.duration.Duration.Inf)
-      } catch {
-        case t: Throwable =>
-          hashedNew.unpersist(blocking = false)
-          try scala.concurrent.Await
-            .result(prepF, scala.concurrent.duration.Duration.Inf).release()
-          catch { case _: Throwable => () }
-          throw t
-      }
+    // the reference prepare and the arriving side's shingling are
+    // independent eager builds: overlapped, neither waits on the other's jobs
+    val (prep, hashedNew) = graft.util.Caching.overlapped("crossNearDups")(
+      crossPrepare(reference, textCol, idCol, k, bands, seed, shingleK), {
+        val h = shingleSetsOf(newDocs, textCol, idCol, shingleK).persist()
+        try { h.count(); h }
+        catch { case t: Throwable => h.unpersist(blocking = false); throw t }
+      })(_.release(), _.unpersist(blocking = false))
     try sweepPrepared(hashedNew, prep, threshold)
     finally prep.release()
   }

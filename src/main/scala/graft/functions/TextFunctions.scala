@@ -214,12 +214,6 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     aggregate(tokens(text), lit(0L), (h, t) => pmod(h * 31 + length(t) + 1, lit(FpMod)))
 
-  /** Strong 64-bit content fingerprint (xxhash64 of normalized text) — the
-    * production dedup key; not SQL-oracle-matched (engine-specific hash).
-    */
-  def contentHash64(text: Column): Column =
-    xxhash64(normalize(text))
-
   /** Normalization for near-exact dedup: lowercase, collapse whitespace,
     * trim.
     */

@@ -1,75 +1,30 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
-/** Exact type-7 quantiles without per-group value buffering (Spark's
-  * `percentile()` holds every group value in executor memory — fine as a
-  * verification harness, a scale-killer on a 100 TB column). Both variants
-  * sort relationally and keep only the two bracketing rows per
-  * (group, prob) into the final aggregate — peak state per group is
-  * O(probs):
-  *
-  * - [[exactQuantiles]]: per-group window sort. Two stages; parallelism =
-  *   group count.
-  * - [[exactQuantilesSpread]]: range-partitioned sort + rank
-  *   reconstruction. More stages, but parallelism independent of group
-  *   count — the shape for a handful of huge groups.
-  *
-  * Both are pinned bit-identical to `percentile()` by QuantilesSpec.
+/** Exact type-7 quantiles without per-group value buffering: Spark's
+  * `percentile()` holds every group value in executor memory, a
+  * scale-killer on a 100 TB column. Pinned bit-identical to `percentile()`
+  * by QuantilesSpec and RangeSortSpec.
   */
 object Quantiles {
 
-  /** One row per group with a column per requested quantile, computed with
-    * a per-group window sort — two stages, minimal overhead; parallelism =
-    * group count, so use this when groups are at least as numerous as
-    * cores (or each group's rows comfortably fit one task). For FEW huge
-    * groups use [[exactQuantilesSpread]].
-    *
-    * Interpolation matches Spark's `percentile()` exactly:
-    * `v_lo · (ceil(h) − h) + v_hi · (h − floor(h))` at rank `h = (n−1)·p`,
-    * collapsing to the exact element when `h` is integral. NULL values are
-    * ignored, like `percentile()`.
+  /** One row per group with a column per requested quantile. [[RangeSort]]
+    * sorts (group, value) once, spread over `spark.sql.shuffle.partitions`
+    * whatever the group count, and gives each group's first position and
+    * non-NULL count `n`; one job then reads only the values at `floor(h)`
+    * and `ceil(h)`, `h = (n−1)·p`, and the driver interpolates them with
+    * `percentile()`'s own arithmetic. NULL values sort last in their group,
+    * past every bracket, so they are ignored as `percentile()` ignores them
+    * and an all-NULL group yields NULL quantiles. EAGER: returns a small
+    * driver-local frame after about four Spark jobs.
     *
     * @param probs    quantile probabilities in [0, 1]
     * @param outNames output column name per prob (same length)
-    */
-  def exactQuantiles(
-      df: DataFrame,
-      valueCol: String,
-      by: Seq[String],
-      probs: Seq[Double],
-      outNames: Seq[String]): DataFrame = {
-    checkArgs(probs, outNames)
-    val keys = by.map(col)
-    // ONE pass (r21): NULL values stay in the frame, sorted LAST, and `__n`
-    // counts only the non-NULLs (`count(col)` ignores them) — so ranks
-    // 1..__n are exactly the old filtered ranks, NULL rows sit above __n
-    // where no bracket selects them, and an all-NULL (or NULL-keyed) group
-    // reaches the final aggregate natively with NULL quantiles. The
-    // previous shape filtered NULLs first and then restored the lost
-    // groups with a second full scan of `df` (distinct keys) plus a
-    // null-safe left join — one entire extra pass over the fact table per
-    // call, measured as ~2 of q100's ~15 jobs and the dominant term of its
-    // lineitem re-scans. percentile()-bit-identity is pinned by
-    // QuantilesSpec on NULL-heavy and NULL-keyed fixtures either way.
-    val sortW = Window.partitionBy(keys: _*).orderBy(col("__v").asc_nulls_last)
-    val cntW = Window.partitionBy(keys: _*)
-    val ranked = df
-      .select((keys :+ col(valueCol).cast("double").as("__v")): _*)
-      .withColumn("__rn", row_number().over(sortW))
-      .withColumn("__n", count(col("__v")).over(cntW))
-    finishFromRanks(ranked, keys, probs, outNames)
-  }
-
-  /** The low-cardinality-group scale path: same result as
-    * [[exactQuantiles]], but the sort is RANGE-partitioned over
-    * (group, value) — parallelism set by `spark.sql.shuffle.partitions`,
-    * not group count — and global per-group ranks are reconstructed from
-    * per-(partition, group) counts (a tiny broadcast side frame). More
-    * stages (range sampling, offset join), so it only wins when single
-    * groups are too big for one task's sort.
     */
   def exactQuantilesSpread(
       df: DataFrame,
@@ -77,99 +32,33 @@ object Quantiles {
       by: Seq[String],
       probs: Seq[Double],
       outNames: Seq[String]): DataFrame = {
-    checkArgs(probs, outNames)
-    val keys = by.map(col)
-
-    // range-partition the (group, value) space: each group's sorted run
-    // spans MANY partitions, each partition holds a contiguous slice.
-    // PERSISTED because two subtrees (the counts/offsets aggregate and the
-    // ranked join) consume it and the range shuffle is nondeterministic
-    // (boundary sampling + spark_partition_id): both sides must see ONE
-    // evaluation by construction, not by hoping the optimizer's
-    // exchange-reuse rule deduplicates the scan. Released below.
-    //
-    // ONE pass (r22, the exactQuantiles r21 treatment): NULL values stay in
-    // the frame, range-partitioned and sorted LAST within their group, and
-    // `__n` counts only the non-NULLs — so ranks 1..__n are exactly the old
-    // filtered ranks, NULL rows sit above __n where no bracket selects
-    // them, and an all-NULL (or NULL-keyed) group reaches the final
-    // aggregate natively. The previous shape filtered NULLs first and then
-    // restored lost groups with a second full scan of `df` (distinct keys)
-    // plus a null-safe left join — one entire extra pass over the fact
-    // table per call.
-    val parted = df
-      .select((keys :+ col(valueCol).cast("double").as("__v")): _*)
-      .repartitionByRange((keys :+ col("__v").asc_nulls_last): _*)
-      .sortWithinPartitions((keys :+ col("__v").asc_nulls_last): _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
-
-    // per-(partition, group) row counts (__c positions the rank offsets over
-    // ALL rows) and non-NULL counts (__cnn sums to the percentile() group
-    // size __n); both tiny (P × groups rows)
-    val counts = parted.groupBy((col("__pid") +: keys): _*)
-      .agg(count(lit(1)).as("__c"), count(col("__v")).as("__cnn"))
-    val offW = Window.partitionBy(keys: _*).orderBy(col("__pid"))
-    val offsets = counts
-      .withColumn("__off", sum(col("__c")).over(offW) - col("__c"))
-      .withColumn("__n", sum(col("__cnn")).over(Window.partitionBy(keys: _*)))
-      .drop("__c", "__cnn")
-
-    // global rank within the group = rows before this partition + local
-    // rank; the local window partitions on (__pid, group) so its
-    // parallelism is partitions × groups, never just groups. The offsets
-    // join is null-safe on the group keys (`<=>`): a USING-style equi-join
-    // would drop every NULL-keyed row here, losing the NULL group's
-    // quantiles to three-valued equality.
-    val offR = ("__pid" +: by).foldLeft(offsets)((d, k) => d.withColumnRenamed(k, s"__o_$k"))
-    val joinCond = (col("__pid") === col("__o___pid")) +: by.map(k => col(k) <=> col(s"__o_$k"))
-    val localW = Window.partitionBy((col("__pid") +: keys): _*)
-      .orderBy(col("__v").asc_nulls_last)
-    val ranked = parted
-      .join(broadcast(offR), joinCond.reduce(_ && _))
-      .drop(("__pid" +: by).map(k => s"__o_$k"): _*)
-      .withColumn("__rn", col("__off") + row_number().over(localW))
-    // materialize the (one-row-per-group) result eagerly so the pinned
-    // `parted` blocks can be released before returning — this variant is
-    // therefore eager, like the dedup operators that share intermediates
-    graft.util.Caching.materialize(finishFromRanks(ranked, keys, probs, outNames), parted)
-  }
-
-  private def checkArgs(probs: Seq[Double], outNames: Seq[String]): Unit = {
     require(probs.nonEmpty && probs.length == outNames.length,
       "probs and outNames must be non-empty and the same length")
     require(probs.forall(p => p >= 0.0 && p <= 1.0), s"probs must be in [0,1]: $probs")
-  }
-
-  /** Shared tail: bracket-row filter + final aggregate + interpolation over
-    * a frame carrying (__v, __rn global 1-based rank, __n group size).
-    */
-  private def finishFromRanks(
-      ranked: DataFrame,
-      keys: Seq[org.apache.spark.sql.Column],
-      probs: Seq[Double],
-      outNames: Seq[String]): DataFrame = {
-    def h(p: Double) = (col("__n") - 1) * p
-    // keep only rows that bracket some requested quantile — the aggregate
-    // below never sees the rest. The `__n === 0` arm admits exactly ONE
-    // representative row of an all-NULL group (both single-pass variants
-    // keep NULL rows, ranked past __n): its when()-guarded aggregates are
-    // all NULL, reproducing percentile()'s NULL row for that group.
-    val bracketing = probs
-      .map(p => col("__rn") - 1 === floor(h(p)) || col("__rn") - 1 === ceil(h(p)))
-      .reduce(_ || _) || (col("__n") === 0 && col("__rn") === 1)
-    val aggs = probs.zip(outNames).flatMap { case (p, nm) =>
-      Seq(
-        min(when(col("__rn") - 1 === floor(h(p)), col("__v"))).as(s"__lo_$nm"),
-        min(when(col("__rn") - 1 === ceil(h(p)), col("__v"))).as(s"__hi_$nm"))
-    } :+ min(col("__n")).as("__n2")
-    val agged = ranked.filter(bracketing).groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-    val outCols = probs.zip(outNames).map { case (p, nm) =>
-      val hh = (col("__n2") - 1) * p
-      when(floor(hh) === ceil(hh), col(s"__lo_$nm"))
-        .otherwise(col(s"__lo_$nm") * (ceil(hh) - hh) + col(s"__hi_$nm") * (hh - floor(hh)))
-        .as(nm)
-    }
-    agged.select((keys ++ outCols): _*)
+    val v = by.length // the value's ordinal, right after the group keys
+    val keys = by.map(col)
+    val sorted = RangeSort(df.select((keys :+ col(valueCol).cast("double").as("__v")): _*),
+      keys :+ col("__v").asc_nulls_last, keyCount = v, validOrdinal = v)
+    val groups = sorted.groups
+    // position h = (n−1)·p and its two brackets, as percentile() computes them
+    def bracket(n: Long, p: Double) = { val h = (n - 1) * p; (h, h.floor.toLong, h.ceil.toLong) }
+    val value = sorted.doublesAt(
+      for (g <- groups if g.valid > 0; p <- probs; (_, lo, hi) = bracket(g.valid, p); i <- Seq(lo, hi))
+        yield g.start + i,
+      v)
+    def quantile(g: RangeSort.Group, p: Double): Any =
+      if (g.valid == 0) null
+      else {
+        val (h, lo, hi) = bracket(g.valid, p)
+        val (l, u) = (value(g.start + lo), value(g.start + hi))
+        if (hi == lo || l == u) l else (hi - h) * l + (h - lo) * u
+      }
+    val schema = StructType(sorted.schema.fields.take(v) ++ outNames.map(StructField(_, DoubleType)))
+    val toRow = UnsafeProjection.create(schema)
+    val rows = groups.map(g =>
+      toRow(new JoinedRow(g.key, new GenericInternalRow(probs.map(quantile(g, _)).toArray))).copy())
+    // a global aggregate over no rows still yields its one NULL row
+    val out = if (rows.isEmpty && by.isEmpty) Seq(new GenericInternalRow(probs.length)) else rows
+    RangeSort.localFrame(df, schema, out.toSeq: Seq[InternalRow])
   }
 }

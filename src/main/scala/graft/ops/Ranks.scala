@@ -1,29 +1,32 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Global order statistics WITHOUT a single-partition window. A partition-less
   * `Window.orderBy` moves the entire input through ONE task (Spark logs
   * `No Partition Defined for Window operation` for a reason) — fine for a
   * calendar-bounded daily aggregate, a 100 TB wall for anything fact-table
-  * sized. The alternative is the range-partitioned rank reconstruction the
-  * quantile spread path uses: sort-shuffle by the order key (parallelism =
-  * `spark.sql.shuffle.partitions`), rank locally per partition, and add each
-  * partition's global offset from a ≤P-row broadcast side frame.
+  * sized. Instead [[RangeSort]] sorts by the order key once (parallelism =
+  * `spark.sql.shuffle.partitions`) and counts each partition's rows; a row's
+  * global rank is its partition's prefix-sum offset plus its position in the
+  * partition, exactly how `RDD.zipWithIndex` numbers rows.
   */
 object Ranks {
 
   /** `df` + a global 1-based row number under `sort` (`rnName`) and, when
-    * `nName` is set, the total row count — computed with a range-partitioned
-    * sort, never a single-partition window. `sort` must be a total order for
-    * the ranks to be deterministic (same contract as `row_number()`).
-    *
-    * EAGER: the range partitioner SAMPLES its child and two subtrees (the
-    * per-partition counts and the rank join) consume the partitioned frame,
-    * so it persists for one evaluation and is released once the (ranked)
-    * result materializes — the exactQuantilesSpread discipline.
+    * `nName` is set, the total row count — computed from a range-partitioned
+    * sort, never a single-partition window. Both names must be new: a name
+    * that is already an input column is refused. The sort and its counts run
+    * here (about three Spark jobs); the returned frame re-reads the sort's
+    * shuffle output, so nothing needs releasing, but each read of it fetches
+    * and sorts the partitions again. So `sort` must be a total order: with
+    * ties, two reads of ONE frame (a self-join included) can number tied
+    * rows differently, where `row_number()` is only nondeterministic across
+    * calls.
     */
   def withGlobalRowNumber(
       df: DataFrame,
@@ -31,28 +34,21 @@ object Ranks {
       rnName: String = "__rn",
       nName: Option[String] = None): DataFrame = {
     require(sort.nonEmpty, "withGlobalRowNumber needs at least one sort column")
-    val parted = df
-      .repartitionByRange(sort: _*)
-      .sortWithinPartitions(sort: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
-    // per-partition counts: ≤ shuffle.partitions rows — the windows over it
-    // are metadata-scale by construction (the Shards offsets argument)
-    val counts = parted.groupBy(col("__pid")).agg(count(lit(1)).as("__c"))
-    val offW = Window.orderBy(col("__pid"))
-    val offsets0 = counts
-      .withColumn("__off", sum(col("__c")).over(offW) - col("__c"))
-    val offsets = nName match {
-      case Some(n) => offsets0.withColumn(n,
-        sum(col("__c")).over(offW.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      case None => offsets0
+    val added = rnName +: nName.toSeq
+    require(added.distinct.length == added.length, s"rnName and nName must differ: $rnName")
+    for (c <- added)
+      require(!df.columns.exists(_.equalsIgnoreCase(c)),
+        s"withGlobalRowNumber: output column '$c' is already an input column")
+    val sorted = RangeSort(df, sort)
+    val (offsets, schema) = (sorted.offsets, sorted.schema.add(rnName, LongType, nullable = false))
+    val types = schema.fields.map(_.dataType)
+    val ranked = sorted.rdd.mapPartitionsWithIndex[InternalRow] { (pid, it) =>
+      val (toRow, rn, joined) = (UnsafeProjection.create(types), new GenericInternalRow(1), new JoinedRow())
+      var i = offsets(pid)
+      it.map { r => i += 1; rn.setLong(0, i); toRow(joined(r, rn)) }
     }
-    val localW = Window.partitionBy(col("__pid")).orderBy(sort: _*)
-    val ranked = parted
-      .join(broadcast(offsets.drop("__c")), "__pid")
-      .withColumn(rnName, col("__off") + row_number().over(localW))
-      .drop("__pid", "__off")
-    graft.util.Caching.materialize(ranked, parted)
+    val out = RangeSort.frame(df, schema, ranked, sorted.total)
+    nName.fold(out)(out.withColumn(_, lit(sorted.total)))
   }
 
   /** SQL `NTILE(k)` from a global rank: with n rows the first `n mod k`

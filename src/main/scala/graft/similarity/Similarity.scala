@@ -149,7 +149,6 @@ object Similarity {
       nlist: Int = 16,
       iters: Int = 2,
       initSeeds: Option[Seq[Seq[Double]]] = None): Seq[Seq[Double]] = {
-    val spark = corpus.sparkSession
     // Each Lloyd round re-scans the corpus (seed job + iters assignment
     // jobs); cache it across the fit like any iterative ML training — but
     // only if the caller hasn't already, so the release below never clobbers

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Generic per-query profiling driver (dev tool, not library surface):
   * runs named queries from [[graft.SparkEntry.queries]] through the bench's

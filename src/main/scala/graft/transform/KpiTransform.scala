@@ -32,15 +32,4 @@ object KpiTransform {
       .withColumn("cpm", safeDiv(col("spend"), col("impressions")) * 1000)
       .withColumn("cpc", safeDiv(col("spend"), col("clicks")))
       .withColumn("cpa", safeDiv(col("spend"), col("conversions")))
-
-  /** Full-refresh CTAS stand-in (`CREATE OR REPLACE TABLE ... AS SELECT`,
-    * transform_staging.py:25): overwrite parquet + register a pass-through
-    * view (transform_staging.py:43-46).
-    */
-  def materializeCurated(staging: DataFrame, path: String, viewName: String = "campaign_daily_metrics_view"): DataFrame = {
-    withKpis(staging).write.mode("overwrite").parquet(path)
-    val curated = staging.sparkSession.read.parquet(path)
-    curated.createOrReplaceTempView(viewName)
-    curated
-  }
 }

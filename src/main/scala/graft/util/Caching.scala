@@ -1,5 +1,8 @@
 package graft.util
 
+import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.DataFrame
 
 /** Cache-lifecycle discipline for operators that persist shared intermediate
@@ -8,6 +11,17 @@ import org.apache.spark.sql.DataFrame
   * unreleased cache is an eviction storm for every query that follows.
   */
 object Caching {
+
+  /** Dev-only plan capture: operators that end in [[materialize]] hide their
+    * real physical plan behind the checkpoint scan, so `graft.Explain` on the
+    * returned frame shows a bare `Scan ExistingRDD`. With
+    * SPARK_GRAFT_EXPLAIN_MATERIALIZE=1 the pre-checkpoint plan prints here
+    * (formatted) before materialization — the r21 plan-evidence hook. Off by
+    * default; the flag is read once so the timed path pays one cached
+    * boolean test.
+    */
+  private val explainMaterialize: Boolean =
+    sys.env.get("SPARK_GRAFT_EXPLAIN_MATERIALIZE").contains("1")
 
   /** Eagerly materialize the (small, output-linear) `result`, then release
     * every intermediate cache.
@@ -21,22 +35,41 @@ object Caching {
     * local checkpoint blocks), swap in reliable `checkpoint()` or a table
     * write — same contract.
     */
-  /** Dev-only plan capture: operators that end in [[materialize]] hide their
-    * real physical plan behind the checkpoint scan, so `graft.Explain` on the
-    * returned frame shows a bare `Scan ExistingRDD`. With
-    * SPARK_GRAFT_EXPLAIN_MATERIALIZE=1 the pre-checkpoint plan prints here
-    * (formatted) before materialization — the r21 plan-evidence hook. Off by
-    * default; the flag is read once so the timed path pays one cached
-    * boolean test.
-    */
-  private val explainMaterialize: Boolean =
-    sys.env.get("SPARK_GRAFT_EXPLAIN_MATERIALIZE").contains("1")
-
   def materialize(result: DataFrame, cached: DataFrame*): DataFrame =
     try {
       if (explainMaterialize) result.explain("formatted")
       result.localCheckpoint(eager = true)
     } finally cached.foreach(_.unpersist(blocking = false))
+
+  /** Bound on a driver wait for an [[overlapped]] build: far above any build
+    * the engine runs, so only a wedged one reaches it and fails the call.
+    */
+  val OverlapBound: FiniteDuration = 30.minutes
+
+  /** Run two independent eager builds at once — `a` on a second driver
+    * thread, `b` on this one. If either fails, the other is awaited and
+    * released before the first failure is rethrown, so a failed call pins
+    * no cache. A wait past [[OverlapBound]] fails naming `op`, and the
+    * still-running build is released when it finishes.
+    */
+  def overlapped[A, B](op: String)(a: => A, b: => B)(
+      releaseA: A => Unit, releaseB: B => Unit): (A, B) = {
+    val fa = Future(a)(ExecutionContext.global)
+    def awaitA(): A =
+      try Await.result(fa, OverlapBound)
+      catch {
+        case e: TimeoutException =>
+          fa.foreach(releaseA)(ExecutionContext.global)
+          throw new IllegalStateException(s"$op: overlapped build still running after $OverlapBound", e)
+      }
+    val vb = try b catch {
+      case t: Throwable =>
+        try releaseA(awaitA()) catch { case s: Throwable => t.addSuppressed(s) }
+        throw t
+    }
+    val va = try awaitA() catch { case t: Throwable => releaseB(vb); throw t }
+    (va, vb)
+  }
 
   /** localCheckpoint a frame AND capture the id of the RDD it pinned, so an
     * iterative operator can release a superseded round's blocks explicitly.

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.connector.expressions.{Expressions, LiteralValue, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation

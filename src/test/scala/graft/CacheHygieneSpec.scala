@@ -25,6 +25,39 @@ class CacheHygieneSpec extends SparkSpec {
     assert(leaked.isEmpty, s"queries leaking cached blocks: ${leaked.mkString(", ")}")
   }
 
+  test("overlapped: a failed build releases the other one before the failure propagates") {
+    import graft.util.Caching.overlapped
+    val released = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    // this thread's build fails while the second thread's is still running
+    val bFails = intercept[IllegalStateException](overlapped("op")(
+      { Thread.sleep(200); "a" }, (throw new IllegalStateException("b broke")): String)(
+      released.add(_), released.add(_)))
+    assert(bFails.getMessage == "b broke" && released.contains("a") && !released.contains("b"))
+    released.clear()
+    // the second thread's build fails after this thread's one is done
+    val aFails = intercept[IllegalArgumentException](overlapped("op")(
+      (throw new IllegalArgumentException("a broke")): String, "b")(
+      released.add(_), released.add(_)))
+    assert(aFails.getMessage == "a broke" && released.contains("b") && !released.contains("a"))
+  }
+
+  test("q166's failed semantic prepare leaks neither the verbatim prepare nor the corpus") {
+    // no doc_id is a multiple of 50, so q166 finds no centroids and its
+    // semantic prepare refuses them while the verbatim prepare is building
+    // its two caches on the second thread
+    val dir = java.nio.file.Files.createTempDirectory("graft-q166-fail").toString
+    for ((t, id) <- Seq("documents" -> "doc_id", "embeddings" -> "vec_id"))
+      Tables.load(spark, sfDir, t).filter(org.apache.spark.sql.functions.pmod(
+        org.apache.spark.sql.functions.col(id), org.apache.spark.sql.functions.lit(50)) =!= 0)
+        .write.parquet(s"$dir/$t.parquet")
+    spark.catalog.clearCache()
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException](SparkEntry.queries("q166_cross_all")(spark, dir))
+    assert(e.getMessage.contains("centroids"), e.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed q166 left a cached frame behind")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds, "a failed q166 left a persistent RDD")
+  }
+
   test("clearMemos releases the checkpoint-backed memo frames") {
     // the shared near-dup pairs memo is localCheckpoint-backed, i.e. a
     // persistent RDD that cacheManager.isEmpty (above) cannot see; prove the

@@ -231,47 +231,39 @@ class QuantilesSpec extends SparkSpec {
       expr(s"percentile(l_extendedprice, ${p}D)").as(nm)
     }
     val ref = li.groupBy(col("l_returnflag")).agg(refAggs.head, refAggs.tail: _*)
-    for (variant <- Seq(
-        graft.ops.Quantiles.exactQuantiles _,
-        graft.ops.Quantiles.exactQuantilesSpread _)) {
-      val mine = variant(li, "l_extendedprice", Seq("l_returnflag"), probs, names)
-      assert(mine.exceptAll(ref).count() == 0 && ref.exceptAll(mine).count() == 0,
-        mine.orderBy("l_returnflag").collect().mkString(" | "))
-    }
+    val mine = graft.ops.Quantiles.exactQuantilesSpread(
+      li, "l_extendedprice", Seq("l_returnflag"), probs, names)
+    assert(mine.exceptAll(ref).count() == 0 && ref.exceptAll(mine).count() == 0,
+      mine.orderBy("l_returnflag").collect().mkString(" | "))
     // single-row group: the quantile IS the value at every prob
     val one = Seq(("a", 7.5)).toDF("g", "v")
-    val r = graft.ops.Quantiles.exactQuantiles(one, "v", Seq("g"), Seq(0.0, 0.5, 1.0),
+    val r = graft.ops.Quantiles.exactQuantilesSpread(one, "v", Seq("g"), Seq(0.0, 0.5, 1.0),
       Seq("a", "b", "c")).collect().head
     assert(r.getDouble(1) == 7.5 && r.getDouble(2) == 7.5 && r.getDouble(3) == 7.5)
     // NULL values are ignored, exactly like percentile()
     val withNulls = Seq(("a", Some(10.0)), ("a", None), ("a", Some(20.0)))
       .toDF("g", "v")
-    val rn = graft.ops.Quantiles.exactQuantiles(withNulls, "v", Seq("g"),
+    val rn = graft.ops.Quantiles.exactQuantilesSpread(withNulls, "v", Seq("g"),
       Seq(0.0, 0.5, 1.0), Seq("lo", "mid", "hi")).collect().head
     assert(rn.getDouble(1) == 10.0 && rn.getDouble(2) == 15.0 && rn.getDouble(3) == 20.0)
     // a group whose values are ALL NULL yields a row with NULL quantiles
     // (percentile() parity), not a dropped group
     val allNull = Seq(("a", Some(1.0)), ("b", None), ("b", None)).toDF("g", "v")
-    for (variant <- Seq(
-        graft.ops.Quantiles.exactQuantiles _,
-        graft.ops.Quantiles.exactQuantilesSpread _)) {
-      val rows = variant(allNull, "v", Seq("g"), Seq(0.5), Seq("med"))
-        .orderBy("g").collect()
-      assert(rows.length == 2, rows.mkString(" | "))
-      assert(rows(0).getDouble(1) == 1.0)
-      assert(rows(1).isNullAt(1), s"all-NULL group must yield NULL med: ${rows(1)}")
-    }
+    val rows = graft.ops.Quantiles.exactQuantilesSpread(allNull, "v", Seq("g"), Seq(0.5), Seq("med"))
+      .orderBy("g").collect()
+    assert(rows.length == 2, rows.mkString(" | "))
+    assert(rows(0).getDouble(1) == 1.0)
+    assert(rows(1).isNullAt(1), s"all-NULL group must yield NULL med: ${rows(1)}")
   }
 
   test("all-NULL group at p = 1.0 still yields its NULL row (single-pass bracket arm)") {
-    // r21's single-pass exactQuantiles keeps NULL rows ranked past the
-    // non-NULL count; at p = 1.0 an all-NULL group's bracket h = (0−1)·1
-    // = −1 matches NO row's rank, so without the explicit __n = 0 arm the
-    // group would vanish from the aggregate instead of reproducing
-    // percentile()'s NULL row. p = 0.5/0.0 accidentally admit rank 1
-    // (ceil(−0.5) = −0.0 = 0), so only p = 1.0 exercises the arm.
+    // NULL rows sort past a group's non-NULL count; at p = 1.0 an
+    // all-NULL group's bracket h = (0−1)·1 = −1 names NO row, so the group
+    // must still reproduce percentile()'s NULL row rather than vanish or
+    // read a position outside its run. p = 0.5/0.0 accidentally land on
+    // rank 1 (ceil(−0.5) = −0.0 = 0), so only p = 1.0 exercises the case.
     val allNull = Seq(("a", Some(2.0)), ("b", None), ("b", None)).toDF("g", "v")
-    val rows = graft.ops.Quantiles.exactQuantiles(allNull, "v", Seq("g"),
+    val rows = graft.ops.Quantiles.exactQuantilesSpread(allNull, "v", Seq("g"),
       Seq(0.0, 1.0), Seq("lo", "hi")).orderBy("g").collect()
     assert(rows.length == 2, rows.mkString(" | "))
     assert(rows(0).getDouble(1) == 2.0 && rows(0).getDouble(2) == 2.0)
@@ -280,9 +272,9 @@ class QuantilesSpec extends SparkSpec {
   }
 
   test("NULL group key with non-null values gets its computed quantiles (percentile() parity)") {
-    // percentile() treats NULL as a group key like any other; the
-    // all-NULL-group restore join must be null-safe or the NULL-keyed
-    // group's real quantiles are orphaned and come back NULL
+    // percentile() treats NULL as a group key like any other: the NULL
+    // key's run must be counted and bracketed like every other group's,
+    // not orphaned into NULL quantiles
     val nullKey = Seq(
       (Some("a"), Some(1.0)), (None, Some(2.0)), (None, Some(4.0)),
       (None, None)).toDF("g", "v")
@@ -290,16 +282,12 @@ class QuantilesSpec extends SparkSpec {
       .agg(expr("percentile(v, 0.0D)").as("lo"),
         expr("percentile(v, 0.5D)").as("med"),
         expr("percentile(v, 1.0D)").as("hi"))
-    for (variant <- Seq(
-        graft.ops.Quantiles.exactQuantiles _,
-        graft.ops.Quantiles.exactQuantilesSpread _)) {
-      val mine = variant(nullKey, "v", Seq("g"), Seq(0.0, 0.5, 1.0),
-        Seq("lo", "med", "hi"))
-      assert(mine.exceptAll(ref).count() == 0 && ref.exceptAll(mine).count() == 0,
-        mine.collect().mkString(" | "))
-      val nullRow = mine.filter(col("g").isNull).collect()
-      assert(nullRow.length == 1 && nullRow.head.getDouble(2) == 3.0,
-        s"NULL-keyed group must carry med=3.0: ${nullRow.mkString(" | ")}")
-    }
+    val mine = graft.ops.Quantiles.exactQuantilesSpread(nullKey, "v", Seq("g"), Seq(0.0, 0.5, 1.0),
+      Seq("lo", "med", "hi"))
+    assert(mine.exceptAll(ref).count() == 0 && ref.exceptAll(mine).count() == 0,
+      mine.collect().mkString(" | "))
+    val nullRow = mine.filter(col("g").isNull).collect()
+    assert(nullRow.length == 1 && nullRow.head.getDouble(2) == 3.0,
+      s"NULL-keyed group must carry med=3.0: ${nullRow.mkString(" | ")}")
   }
 }

@@ -20,14 +20,24 @@ class RanksSpec extends SparkSpec {
     assert(got.select($"id", $"__rn").except(want.select($"id", $"__rn")).isEmpty &&
       want.select($"id", $"__rn").except(got.select($"id", $"__rn")).isEmpty)
     assert(got.select($"__n").distinct().as[Long].collect().toSeq == Seq(257L))
-    // no partition-less window over the DATA (the offsets side frame's
-    // ≤P-row window is the metadata-scale exception): the ranked output
-    // came from a range exchange, pinned by the plan in plans/r22
   }
 
   test("withGlobalRowNumber on an empty frame yields an empty frame") {
     val df = Seq.empty[(Long, Double)].toDF("id", "v")
     assert(graft.ops.Ranks.withGlobalRowNumber(df, Seq(col("v"))).isEmpty)
+  }
+
+  test("withGlobalRowNumber refuses output names that are already input columns") {
+    val df = Seq((1L, 2.0, 3L)).toDF("id", "__rn", "n")
+    val rn = intercept[IllegalArgumentException](
+      graft.ops.Ranks.withGlobalRowNumber(df, Seq(col("id"))))
+    assert(rn.getMessage.contains("'__rn'"), rn.getMessage)
+    // the count column too, compared as Spark resolves names (case-insensitively)
+    val n = intercept[IllegalArgumentException](
+      graft.ops.Ranks.withGlobalRowNumber(df, Seq(col("id")), rnName = "r", nName = Some("N")))
+    assert(n.getMessage.contains("'N'"), n.getMessage)
+    intercept[IllegalArgumentException](
+      graft.ops.Ranks.withGlobalRowNumber(df, Seq(col("id")), rnName = "r", nName = Some("r")))
   }
 
   test("ntileFromRank equals ntile() for every n in 1..40 and k in 1..7") {

@@ -156,7 +156,7 @@ class RollupSpec extends SparkSpec {
 
     val got = IncrementalRollup.quantilesFromHist(folded, Seq("g"), width,
       Seq(0.5, 0.9, 0.99), Seq("p50", "p90", "p99")).orderBy("g").collect()
-    val exact = graft.ops.Quantiles.exactQuantiles(rows.toDF("g", "v"), "v", Seq("g"),
+    val exact = graft.ops.Quantiles.exactQuantilesSpread(rows.toDF("g", "v"), "v", Seq("g"),
       Seq(0.5, 0.9, 0.99), Seq("p50", "p90", "p99")).orderBy("g").collect()
     got.zip(exact).foreach { case (h, e) =>
       assert(h.getString(0) == e.getString(0))

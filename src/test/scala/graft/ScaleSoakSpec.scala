@@ -1038,10 +1038,10 @@ class ScaleSoakSpec extends SparkSpec {
 
   test("soak: exact quantiles scale near-linearly, no disk spill") {
     assume(enabled, "set SPARK_GRAFT_SOAK=1 to run the scale soak")
-    val m1 = measure(() => noop(graft.ops.Quantiles.exactQuantiles(
+    val m1 = measure(() => noop(graft.ops.Quantiles.exactQuantilesSpread(
       scaledLineitem(1), "l_extendedprice", Seq("l_returnflag"),
       Seq(0.05, 0.5, 0.95), Seq("lo", "med", "hi"))))
-    val m4 = measure(() => noop(graft.ops.Quantiles.exactQuantiles(
+    val m4 = measure(() => noop(graft.ops.Quantiles.exactQuantilesSpread(
       scaledLineitem(4), "l_extendedprice", Seq("l_returnflag"),
       Seq(0.05, 0.5, 0.95), Seq("lo", "med", "hi"))))
     assertScaling("quantiles", m1, m4)
