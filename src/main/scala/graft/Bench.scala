@@ -47,44 +47,11 @@ object Bench {
     val loadStart = loadavg()
     val spark = Sessions.local(Sessions.coresFromEnv, appName = "graft-bench")
 
-    // Per-rep shuffle-write bytes from a task-end listener: two code states
-    // producing identical byte vectors on the same inputs ran the same
-    // physical work, so any wall-clock delta between their artifacts is box
-    // state, not a plan change (the tools/Adjudicate protocol, now carried
-    // by EVERY bench artifact — a round-over-round timing question is
-    // settled by diffing the committed vectors, no re-run needed).
-    val shuffleW = new java.util.concurrent.atomic.LongAdder
-    val listenerEvents = new java.util.concurrent.atomic.LongAdder
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (t.taskMetrics != null)
-          shuffleW.add(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        listenerEvents.increment()
-      }
-    })
-    // the listener bus is async: poll the event count to stability OUTSIDE
-    // the timed window (sec is captured before settling, so the measured
-    // numbers are unchanged; only byte attribution waits for the drain)
-    def settleListener(): Unit = {
-      var last = -1L
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(80)
-        val n = listenerEvents.sum()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    }
-
     // Warm the session (codegen, FS metadata, parquet footers) outside the
     // measured window so the first query isn't charged for JVM startup.
     Seq("lineitem", "documents", "embeddings")
       .foreach(t => Tables.load(spark, sfDir, t).limit(1).count())
     Tables.events(spark, sfDir).limit(1).count()
-    // drain the warmup jobs' in-flight task-end events BEFORE the first
-    // rep's reset — a late-delivered warmup event landing after reset
-    // would nondeterministically inflate the first query's byte vector,
-    // which the byte-identity adjudication would misread as a plan change
-    settleListener()
 
     // Optional comma-separated query filter for local profiling
     // (e.g. SPARK_GRAFT_QUERIES=q40_minhash_neardups,q42_ann_lsh).
@@ -106,12 +73,18 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       val samples = (1 to reps).map { rep =>
-        shuffleW.reset()
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: ${e.getMessage}") }
-        val sec = (System.nanoTime() - t0) / 1e9
-        settleListener()
+        // Per-rep shuffle-write bytes from the run recorder: two code states
+        // producing identical byte vectors on the same inputs ran the same
+        // physical work, so any wall-clock delta between their artifacts is
+        // box state, not a plan change — a round-over-round timing question
+        // is settled by diffing the committed vectors, no re-run needed. The
+        // recorder's listener setup and bus drains sit outside [t0, sec].
+        val (sec, record) = graft.obs.Recorder.measure(spark) {
+          val t0 = System.nanoTime()
+          try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+          catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: ${e.getMessage}") }
+          (System.nanoTime() - t0) / 1e9
+        }
         // isolate runs: drop operator-internal persists so no run is timed
         // against another's warm cache (and memory stays bounded); memoized
         // checkpoint frames (q40/q59 shared pairs) are released too so every
@@ -119,7 +92,7 @@ object Bench {
         spark.catalog.clearCache()
         SparkEntry.clearMemos()
         System.err.println(f"[bench] $name%-24s rep$rep%d ${sec}%8.2f s")
-        (sec, shuffleW.sum())
+        (sec, record.shuffleWriteBytes)
       }
       val med = median(samples.map(_._1))
       System.err.println(f"[bench] $name%-24s median ${med}%8.2f s")

@@ -1,88 +1,48 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.obs.Recorder
 import graft.streaming.IncrementalClusters
 
 /** Profiling driver for the q151 fold path (dev tool, not library
   * surface): times pair generation and each fold over two rounds (cold +
-  * JIT-warm), with an optional per-job trace on the second round — the
+  * JIT-warm), with the per-job list of every second-round fold — the
   * harness used to find and verify the r17 per-fold overhead cuts
   * (driver union-find contraction, footprint-collect reuse, byte-targeted
   * rewrite coalesce, manifest-reuse commit hint).
+  *
+  * Usage: `runMain graft.tools.ProfileFold [sfDir]` (env SPARK_GRAFT_CPUS
+  * as in Bench).
   */
 object ProfileFold {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .appName("profile-fold").master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def t[T](tag: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[prof] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
+    val spark = graft.Sessions.local(graft.Sessions.coresFromEnv, appName = "profile-fold")
     val docs = graft.Tables.documents(spark, sf)
-    val pairs = t("pairs (minhash+verify)") {
+    val (pairs, pr) = Recorder.measure(spark) {
       val p = Dedup.minHashVerifiedNearDups(docs, threshold = 0.5)
         .select(col("id_a"), col("id_b")).localCheckpoint()
       System.err.println(s"[prof]   pairs=${p.count()}")
       p
     }
-    val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val jobNanos = new java.util.concurrent.atomic.LongAdder
-    val listenerEvents = new java.util.concurrent.atomic.LongAdder
-    var traceJobs = false
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobStarts.put(js.jobId, (System.nanoTime(),
-          Option(js.properties.getProperty("spark.job.description")).getOrElse("?")))
-        listenerEvents.increment()
-      }
-      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val s = jobStarts.remove(je.jobId)
-        if (s != null) {
-          jobNanos.add(System.nanoTime() - s._1)
-          if (traceJobs) System.err.println(
-            f"[prof]     job ${je.jobId}%4d ${(System.nanoTime() - s._1) / 1e9}%.3f s  ${s._2.take(90)}")
-        }
-        listenerEvents.increment()
-      }
-    })
-    // the listener bus is async (and its internal handle is private to
-    // Spark): poll the event count to stability before each fold's print /
-    // reset so a late job-end event can't bleed into the next fold's
-    // attribution — the Bench/Adjudicate settle pattern
-    def settleListener(): Unit = {
-      var last = -1L; var stable = 0
-      while (stable < 3) {
-        Thread.sleep(60)
-        val n = listenerEvents.sum()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    }
-    // per-fold cost attribution: wall = sum(job time) + driver-side gap;
-    // the manifest layer's share (listing + parse + publish) comes from the
-    // ManifestMetrics counters — the "is the fold floor manifest IO?"
+    System.err.println(f"[prof] ${"pairs (minhash+verify)"}%-28s ${pr.wallSec}%.3f s")
+    // per-fold cost attribution: wall = time covered by jobs + driver-side
+    // gap; the manifest layer's share (listing + parse + publish) comes from
+    // the ManifestMetrics counters — the "is the fold floor manifest IO?"
     // question the r19 verdict asked, answered by measurement
     val mm = graft.catalog.SnapshotTable.ManifestMetrics
     (1 to 2).foreach { round =>
       val tbl = java.nio.file.Files.createTempDirectory(s"graft-prof$round").toString
-      traceJobs = round == 2 && args.contains("--trace-jobs")
       (0 until 3).foreach { c =>
-        jobNanos.reset(); mm.reset()
-        t(s"r$round fold$c") {
-          IncrementalClusters.foldPairs(spark, tbl,
-            pairs.filter(pmod(col("id_a") + col("id_b"), lit(3)) === c))
-        }
-        settleListener()
-        System.err.println(f"[prof]   jobs ${jobNanos.sum() / 1e9}%.3f s | manifest " +
+        mm.reset()
+        val (_, r) = Recorder.measure(spark)(IncrementalClusters.foldPairs(spark, tbl,
+          pairs.filter(pmod(col("id_a") + col("id_b"), lit(3)) === c)))
+        System.err.println(f"[prof] ${s"r$round fold$c"}%-28s ${r.wallSec}%.3f s")
+        if (round == 2) r.jobs.foreach(j => System.err.println(
+          f"[prof]     job ${j.id}%4d ${j.sec}%.3f s  ${j.description.take(90)}"))
+        System.err.println(f"[prof]   jobs ${r.coveredSec}%.3f s | manifest " +
           f"listings=${mm.listings.sum()} ${mm.listingNanos.sum() / 1e9}%.3f s, " +
           f"parses=${mm.parses.sum()} ${mm.parseNanos.sum() / 1e9}%.3f s, " +
           f"publishes=${mm.publishes.sum()} ${mm.publishNanos.sum() / 1e9}%.3f s")

@@ -1,5 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
+import scala.concurrent.duration._
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{classic, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -10,7 +13,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * `SparkSessionExtensions`, but plan construction itself has no public
   * equivalent, so this shim lives in an `org.apache.spark.sql` subpackage
   * (the standard pattern across Spark connector/extension libraries).
-  * Nothing else in the engine reaches into Spark internals this way.
+  * Nothing else in the engine reaches into Spark internals this way. The
+  * listener-bus drain `graft.obs.Recorder` needs lives here for the same
+  * reason: `SparkContext.listenerBus` is `private[spark]`.
   */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -64,4 +69,22 @@ object Bridge {
     classic.Dataset.ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(
       qe.analyzed.output, qe.toRdd, isStreaming = true)(spark))
   }
+
+  /** How long one [[drainListenerBus]] waits. Draining a healthy bus takes
+    * milliseconds; one still busy after a minute is stuck, and a metrics
+    * reader must fail rather than report partial counters.
+    */
+  val ListenerBusDrainBound: FiniteDuration = 1.minute
+
+  /** Block until the listener bus has delivered every event posted so far
+    * to every listener, so counters fed by listeners are complete when
+    * read.
+    */
+  def drainListenerBus(sc: SparkContext): Unit =
+    try sc.listenerBus.waitUntilEmpty(ListenerBusDrainBound.toMillis)
+    catch {
+      case e: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"listener bus still busy after Bridge.ListenerBusDrainBound ($ListenerBusDrainBound)", e)
+    }
 }

@@ -36,34 +36,11 @@ class CurationPlanShapeSpec extends SparkSpec {
   /** Node names across EVERY query execution `run` triggers — operators
     * that materialize-and-release internally (semanticDedup, dsirScores)
     * return a checkpoint scan, so their real plans are only visible
-    * through the execution listener.
+    * through the query executions the run recorded.
     */
-  private def executedNodesDuring(run: => Unit): Seq[String] = {
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
-        allNodes(qe.executedPlan).foreach(p => buf.add(p.nodeName))
-        counter.incrementAndGet(); ()
-      }
-      override def onFailure(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      run
-      // the listener bus is async — wait for quiet
-      var last = -1; var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val n = counter.get()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    } finally spark.listenerManager.unregister(l)
-    import scala.jdk.CollectionConverters._
-    buf.asScala.toSeq
-  }
+  private def executedNodesDuring(run: => Unit): Seq[String] =
+    graft.obs.Recorder.measure(spark)(run)._2.executions
+      .flatMap(qe => allNodes(qe.executedPlan)).map(_.nodeName)
 
   private lazy val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
 

@@ -68,27 +68,9 @@ class SkewSpec extends SparkSpec {
     val right = spark.range(16).select(col("id").as("k"), (col("id") * 10).as("y"))
 
     def joinStageTaskReads(run: () => Unit): Seq[Long] = {
-      val recs = scala.collection.mutable.Buffer.empty[(Int, Long)]
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            recs.synchronized { recs += ((t.stageId, t.taskMetrics.shuffleReadMetrics.recordsRead)) }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        run()
-        // listener events are async: poll until the buffer goes quiet
-        var last = -1
-        var stable = 0
-        while (stable < 3) {
-          Thread.sleep(200)
-          val now = recs.synchronized(recs.size)
-          if (now == last) stable += 1 else { stable = 0; last = now }
-        }
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val tasks = graft.obs.Recorder.measure(spark)(run())._2.tasks
       // the join's reduce stage is the stage with the largest shuffle-read total
-      val byStage = recs.synchronized(recs.toSeq).groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      byStage.maxBy(_._2.sum)._2
+      tasks.groupBy(_.stageId).values.map(_.map(_.shuffleReadRecords)).maxBy(_.sum)
     }
     def maxOverMedian(reads: Seq[Long]): Double = {
       val nz = reads.filter(_ > 0).sorted

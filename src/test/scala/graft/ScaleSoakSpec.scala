@@ -9,7 +9,7 @@ import graft.similarity.Similarity
 /** Empirical scaling evidence for the heavy pipelines: run each at 1× and
   * 4× input and require near-linear growth in time and shuffle volume with
   * ZERO disk spill — the measured counterpart of the "would this survive
-  * 100×?" plan arguments. Metrics come from a SparkListener (per-task
+  * 100×?" plan arguments. Metrics come from `graft.obs.Recorder` (per-task
   * shuffle write bytes, spill, peak execution memory), not wall-clock
   * guesswork alone.
   *
@@ -42,35 +42,11 @@ class ScaleSoakSpec extends SparkSpec {
     * a no-op the second time); repeatable actions go through [[measure]].
     */
   private def measureOnce(run: () => Unit): RunMetrics = {
-    val acc = new java.util.concurrent.atomic.AtomicReference(
-      (0L, 0L, 0L, 0L, 0)) // (shufW, disk, mem, peak, events)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) acc.updateAndGet { case (w, d, m, p, n) =>
-          (w + t.taskMetrics.shuffleWriteMetrics.bytesWritten,
-            d + t.taskMetrics.diskBytesSpilled,
-            m + t.taskMetrics.memoryBytesSpilled,
-            math.max(p, t.taskMetrics.peakExecutionMemory), n + 1)
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    try {
-      run()
-      // listener bus is async — wait for quiet
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(150)
-        val n = acc.get()._5
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    val sec = (System.nanoTime() - t0) / 1e9
-    val (w, d, m, p, _) = acc.get()
+    val (_, r) = graft.obs.Recorder.measure(spark)(run())
     spark.catalog.clearCache()
     SparkEntry.clearMemos()
-    RunMetrics(sec, w, d, m, p)
+    RunMetrics(r.wallSec, r.shuffleWriteBytes, r.tasks.map(_.diskSpill).sum,
+      r.tasks.map(_.memSpill).sum, r.tasks.map(_.peakMem).maxOption.getOrElse(0L))
   }
 
   private def assertScaling(name: String, m1: RunMetrics, m4: RunMetrics,
@@ -89,26 +65,13 @@ class ScaleSoakSpec extends SparkSpec {
   }
 
   /** Capture a named `observe` metric (first long of its row) from the
-    * queries `run` executes. The ExecutionListenerBus is async — poll until
-    * the metric lands (or time out loudly).
+    * last query `run` executes that carries it.
     */
   private def observedMetric(name: String)(run: () => Unit): Long = {
-    val got = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        qe.observedMetrics.get(name).foreach(r => got.set(r.getLong(0)))
-      override def onFailure(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      run()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (got.get() == Long.MinValue && System.nanoTime() < deadline) Thread.sleep(100)
-    } finally spark.listenerManager.unregister(l)
-    assert(got.get() != Long.MinValue, s"observed metric '$name' never arrived")
-    got.get()
+    val (_, r) = graft.obs.Recorder.measure(spark)(run())
+    val got = r.executions.flatMap(_.observedMetrics.get(name))
+    assert(got.nonEmpty, s"observed metric '$name' never arrived")
+    got.last.getLong(0)
   }
 
   /** `factor`× the sf0.1 documents: replica i suffixes EVERY token with

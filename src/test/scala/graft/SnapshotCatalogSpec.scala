@@ -581,41 +581,17 @@ class SnapshotCatalogSpec extends SparkSpec {
     (1 to 3).foreach(i => SnapshotTable.append(spark, mk(i * 10, i * 10 + 10), dir))
     // 4 top-level commit dirs; keepVersions=4 keeps the plan empty so the
     // only work is the walk itself — whose mechanism (driver listing vs
-    // Spark job) is observable through the job-group status tracker
-    def jobsDuring(group: String, threshold: Int): Int = {
-      spark.sparkContext.setJobGroup(group, group)
+    // Spark job) shows in the jobs the run recorder counts
+    def jobsDuring(threshold: Int): Int = {
       spark.conf.set("spark.graft.vacuum.parallelListingThreshold", threshold.toString)
-      try SnapshotTable.vacuumDryRun(spark, dir, keepVersions = 4, minUnreferencedAgeMs = 0)
-      finally {
-        spark.conf.unset("spark.graft.vacuum.parallelListingThreshold")
-        spark.sparkContext.clearJobGroup()
-      }
-      // the status store is listener-fed (async): poll up to 5s
-      val deadline = System.currentTimeMillis() + 5000
-      var n = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      while (n == 0 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(50)
-        n = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      }
-      n
+      try graft.obs.Recorder.measure(spark)(SnapshotTable.vacuumDryRun(
+        spark, dir, keepVersions = 4, minUnreferencedAgeMs = 0))._2.jobs.size
+      finally spark.conf.unset("spark.graft.vacuum.parallelListingThreshold")
     }
     // dirs(4) > threshold(3) → the walk runs as a Spark job
-    assert(jobsDuring("vacbound-above", 3) >= 1,
-      "4 dirs over threshold 3 must list via a Spark job")
-    // dirs(4) <= threshold(4) → pure driver walk, zero jobs (the positive
-    // case above already bounded listener latency well under the poll window)
-    Thread.sleep(300)
-    val baseline = spark.sparkContext.statusTracker.getJobIdsForGroup("vacbound-at").length
-    spark.sparkContext.setJobGroup("vacbound-at", "vacbound-at")
-    spark.conf.set("spark.graft.vacuum.parallelListingThreshold", "4")
-    try SnapshotTable.vacuumDryRun(spark, dir, keepVersions = 4, minUnreferencedAgeMs = 0)
-    finally {
-      spark.conf.unset("spark.graft.vacuum.parallelListingThreshold")
-      spark.sparkContext.clearJobGroup()
-    }
-    Thread.sleep(300)
-    assert(spark.sparkContext.statusTracker.getJobIdsForGroup("vacbound-at").length == baseline,
-      "4 dirs at threshold 4 must walk on the driver (no Spark job)")
+    assert(jobsDuring(3) >= 1, "4 dirs over threshold 3 must list via a Spark job")
+    // dirs(4) <= threshold(4) → pure driver walk, zero jobs
+    assert(jobsDuring(4) == 0, "4 dirs at threshold 4 must walk on the driver (no Spark job)")
     assert(SnapshotTable.DefaultVacuumParallelThreshold == 64)
   }
 

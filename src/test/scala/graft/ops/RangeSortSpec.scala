@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -121,32 +120,8 @@ class RangeSortSpec extends graft.SparkSpec {
       }
   }
 
-  /** Spark jobs `body` submits, counted by a listener on this thread's job group. */
-  private def jobsOf(body: => Unit): Int = {
-    val group = s"range-sort-jobs-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "job count pin")
-    try {
-      body
-      // listener events are async: poll until the count goes quiet
-      var (last, stable) = (-1, 0)
-      while (stable < 3) {
-        Thread.sleep(150)
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    jobs.get()
-  }
+  /** Spark jobs `body` submits. */
+  private def jobsOf(body: => Unit): Int = graft.obs.Recorder.measure(spark)(body)._2.jobs.size
 
   test("job count: a quantile call runs 4 jobs with AQE (3 without), ranks 3 (2)") {
     // quantiles: range-boundary sample, sort map stage (AQE submits it on
