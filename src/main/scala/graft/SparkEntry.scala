@@ -1871,7 +1871,7 @@ object SparkEntry {
 
     // ---- planner-integrated snapshot relation (custom FileIndex, the
     // Delta TahoeFileIndex seam): the committed table read through
-    // readTable, filtered and aggregated through the ordinary DataFrame
+    // SnapshotTable.read, filtered and aggregated through the ordinary DataFrame
     // surface — manifest pruning happens at planning time invisibly
     // (asserted by SnapshotRelationSpec's numFiles metrics; here the
     // oracle gates end-to-end row fidelity of the scan path) ----
@@ -1885,7 +1885,7 @@ object SparkEntry {
         if (k == 0) graft.catalog.SnapshotTable.write(s, part, tbl)
         else graft.catalog.SnapshotTable.append(s, part, tbl)
       }
-      graft.catalog.SnapshotTable.readTable(s, tbl)
+      graft.catalog.SnapshotTable.read(s, tbl)
         .filter(col("o_totalprice") > 150000.0)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),

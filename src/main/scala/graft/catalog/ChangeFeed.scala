@@ -106,7 +106,7 @@ object ChangeFeed {
       s"key column '$k' not in snapshot schema ${schema.fieldNames.mkString("[", ", ", "]")}"))
     val dataCols = schema.fieldNames.filterNot(keys.contains).toSeq
     // project a frame onto the commit's post-schema (pre-evolution files
-    // read NULL for columns they predate — readEntries already fills those)
+    // read NULL for columns they predate — the scan already fills those)
     def onSchema(df: DataFrame): DataFrame =
       df.select(schema.fields.map(f => col(s"`${f.name}`")).toSeq: _*)
 
@@ -120,20 +120,16 @@ object ChangeFeed {
     // versions). Diff cost stays O(rewritten + vector-diffed rows) — the
     // carried clean files never enter any side.
     def hidden = onSchema(SnapshotTable.rowsAtDvDiff(spark, dir,
-      dvChanged.map(e => (e, e.dv.map(_.path), prevByPath(e.path).dv.map(_.path))),
-      m.schemaDdl, SnapshotTable.mappingOf(Some(m))))
+      dvChanged.map(e => (e, e.dv.map(_.path), prevByPath(e.path).dv.map(_.path))), m))
     def restored = onSchema(SnapshotTable.rowsAtDvDiff(spark, dir,
-      dvChanged.map(e => (e, prevByPath(e.path).dv.map(_.path), e.dv.map(_.path))),
-      m.schemaDdl, SnapshotTable.mappingOf(Some(m))))
+      dvChanged.map(e => (e, prevByPath(e.path).dv.map(_.path), e.dv.map(_.path))), m))
 
     if (removed.isEmpty && dvChanged.isEmpty)
       return Some(withMeta(
-        onSchema(SnapshotTable.readEntries(spark, dir, added, m.schemaDdl,
-          SnapshotTable.mappingOf(Some(m)))), "insert"))
+        onSchema(SnapshotTable.scan(spark, dir, m.copy(entries = added))), "insert"))
     if (added.isEmpty && dvChanged.isEmpty)
       return Some(withMeta(
-        onSchema(SnapshotTable.readEntries(spark, dir, removed, m.schemaDdl,
-          SnapshotTable.mappingOf(Some(m)))), "delete"))
+        onSchema(SnapshotTable.scan(spark, dir, m.copy(entries = removed))), "delete"))
     if (added.isEmpty && removed.isEmpty)
       // pure vector commit (MoR delete, or a vector-only rollback): the
       // hidden rows ARE the deletes, the restored rows the inserts — no
@@ -161,8 +157,7 @@ object ChangeFeed {
     def sideUnion(entries: Seq[SnapshotTable.FileEntry], dvPart: => DataFrame): DataFrame = {
       val filePart =
         if (entries.nonEmpty)
-          Some(onSchema(SnapshotTable.readEntries(spark, dir, entries, m.schemaDdl,
-            SnapshotTable.mappingOf(Some(m)))))
+          Some(onSchema(SnapshotTable.scan(spark, dir, m.copy(entries = entries))))
         else None
       val parts = filePart.toSeq ++ (if (dvChanged.nonEmpty) Seq(dvPart) else Seq.empty)
       parts.reduce(_ unionByName _)

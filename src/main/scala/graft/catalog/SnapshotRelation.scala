@@ -1,22 +1,23 @@
 package graft.catalog
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitioningAwareFileIndex, PartitionSpec}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{PartitionDirectory, PartitioningAwareFileIndex, PartitionSpec}
 import org.apache.spark.sql.types.StructType
 
 /** PLANNING-TIME integration of the snapshot table with Spark's file scan:
-  * a [[FileIndex]] over one committed manifest, the same extension seam
-  * Delta's TahoeFileIndex sits in. The planner hands `listFiles` the
-  * query's resolved data filters, and the index answers with only the
-  * manifest entries whose per-file stats admit a match — so EVERY read of
-  * the relation (DataFrame filters, SQL, join pushdowns) skips files
-  * automatically, without routing through the explicit
-  * [[SnapshotTable.readWhere]] API, and parquet row-group pushdown +
-  * column pruning compose on top for free.
+  * a [[FileIndex]] over the entries of one committed manifest (all of them,
+  * or the subset a caller pruned to), the same extension seam Delta's
+  * TahoeFileIndex sits in. Every Scala read builds its relation over this
+  * index ([[SnapshotTable.scan]]), and the SQL catalog and the row-level
+  * DSv2 scan hand it to Spark's parquet scan builder. The planner hands
+  * `listFiles` the query's resolved data filters, and the index answers
+  * with only the entries whose per-file stats admit a match — so EVERY
+  * read (DataFrame filters, SQL, join pushdowns) skips files
+  * automatically, and parquet row-group pushdown + column pruning compose
+  * on top for free.
   *
   * The index never touches the filesystem: paths, sizes, and row counts
   * all come from the manifest (immutable files + versioned manifests make
@@ -27,7 +28,7 @@ import org.apache.spark.sql.types.StructType
   * contract as [[SnapshotTable.read]]).
   */
 private[graft] class SnapshotFileIndex(
-    spark: SparkSession, dir: String, manifest: SnapshotTable.Manifest)
+    spark: SparkSession, dir: String, private val manifest: SnapshotTable.Manifest)
   extends PartitioningAwareFileIndex(spark, Map.empty, None) {
   // PartitioningAwareFileIndex (rather than bare FileIndex) so the SAME
   // index serves both the V1 HadoopFsRelation below and the DSv2
@@ -73,63 +74,19 @@ private[graft] class SnapshotFileIndex(
   override def refresh(): Unit = ()
 
   override def sizeInBytes: Long = manifest.entries.map(_.bytes).sum
-}
 
-private[graft] object SnapshotRelation {
-
-  /** The snapshot at `version` (None = current) as a planner-integrated
-    * relation (see [[SnapshotFileIndex]]). Requires a recorded schema
-    * (every manifest this engine writes has one; legacy schema-less
-    * manifests use [[SnapshotTable.read]]).
-    */
-  def apply(spark: SparkSession, dir: String,
-      version: Option[Long] = None): DataFrame = {
-    val m = SnapshotTable.manifestFor(spark, dir, version)
-    val schema = StructType.fromDDL(m.schemaDdl.getOrElse(throw new IllegalStateException(
-      s"snapshot at $dir has no recorded schema; use SnapshotTable.read")))
-    // the FILE relation reads under PHYSICAL names (what renamed columns
-    // are stored as — [[SnapshotTable.Manifest.columnMapping]]); one
-    // final aliasing Project restores the logical names, and filters /
-    // column pruning push straight through it to the scan
-    val mapping = SnapshotTable.mappingOf(Some(m))
-    val physical = SnapshotTable.physicalSchema(schema, mapping)
-    val rel = HadoopFsRelation(
-      new SnapshotFileIndex(spark, dir, m),
-      partitionSchema = new StructType(),
-      // nullable-normalized like DataSource.resolveRelation does for every
-      // file source (manifests written before mergeSchemas nullable-ized
-      // appended columns would otherwise hide pre-evolution NULLs);
-      // top-level is enough — snapshot schemas are flat
-      dataSchema = StructType(physical.fields.map(_.copy(nullable = true))),
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
-    val plain = org.apache.spark.sql.graftbridge.Bridge.ofRows(
-      spark, LogicalRelation(rel, isStreaming = false))
-    import org.apache.spark.sql.functions.{broadcast, col}
-    // physical → logical by position (mapping renames, never reorders)
-    def logicalized(df: DataFrame): DataFrame =
-      if (mapping.isEmpty) df
-      else df.select(physical.fields.zip(schema.fields).map { case (p, l) =>
-        col(s"`${p.name}`").as(l.name) }.toSeq: _*)
-    val dvEntries = m.entries.filter(_.dv.isDefined)
-    if (dvEntries.isEmpty) logicalized(plain)
-    else {
-      // merge-on-read deletion vectors: an anti-join on the file source's
-      // native (file_path, row_index) metadata drops deleted positions.
-      // Data filters still push THROUGH the join to the scan (the join
-      // only consumes metadata columns), so planner-integrated pruning is
-      // unchanged; the build side is the deleted-position set — tiny
-      // relative to data, broadcast-hinted while it plausibly fits
-      val dvFrame = SnapshotTable.dvPositions(spark, dir, dvEntries)
-      val totalDeleted = dvEntries.map(_.dv.get.deleted).sum
-      val build = if (totalDeleted <= 5000000L) broadcast(dvFrame) else dvFrame
-      logicalized(plain
-        .select(col("*"),
-          col("_metadata.file_path").as(SnapshotTable.PosFileCol),
-          col("_metadata.row_index").as(SnapshotTable.PosIdxCol))
-        .join(build, Seq(SnapshotTable.PosFileCol, SnapshotTable.PosIdxCol), "left_anti")
-        .select(physical.fieldNames.map(c => col(s"`$c`")).toSeq: _*))
-    }
+  // value identity over (table, files): two reads of one version
+  // canonicalize equal, so `sameResult` and the cache manager treat them as
+  // one relation — what InMemoryFileIndex's root-path equality gives a
+  // path-list read. The entries carry their deletion-vector references,
+  // so a vector change makes the indexes differ.
+  override def equals(other: Any): Boolean = other match {
+    case o: SnapshotFileIndex =>
+      o.qualifiedDir == qualifiedDir && o.manifest.entries == manifest.entries
+    case _ => false
   }
+
+  private lazy val hash = (qualifiedDir, manifest.entries).hashCode
+
+  override def hashCode(): Int = hash
 }

@@ -350,26 +350,24 @@ object SnapshotTable {
 
   /** The latest snapshot as a DataFrame — only the manifest's files, so a
     * concurrent compact/merge (which only ADDS files before its commit)
-    * cannot change what this snapshot reads.
+    * cannot change what this snapshot reads. The frame is a
+    * planner-integrated relation ([[scan]]): any filter applied to it —
+    * DataFrame API, SQL over a temp view, join pushdowns — prunes manifest
+    * entries at planning time.
     */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val m = snapshot(spark, dir)
-    readEntries(spark, dir, m.entries, m.schemaDdl, mappingOf(Some(m)))
-  }
+  def read(spark: SparkSession, dir: String): DataFrame =
+    scan(spark, dir, snapshot(spark, dir))
 
   /** Time travel: the table exactly as committed at `version` — including
-    * its schema as of that version. Free with immutable files + versioned
-    * manifests — available as long as [[vacuum]] retention still covers
-    * that version (expired versions throw).
+    * its schema as of that version, and with the same planning-time
+    * pruning as [[read]] (files are immutable, so an old manifest's stats
+    * are as good as the current one's). Free with immutable files +
+    * versioned manifests — available as long as [[vacuum]] retention still
+    * covers that version (expired versions throw). `TIMESTAMP AS OF` is
+    * `readVersion(spark, dir, versionAtTimestamp(spark, dir, ts))`.
     */
-  def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame = {
-    val fs = fsFor(spark, dir)
-    val p = manifestVersions(fs, dir).collectFirst { case (v, path) if v == version => path }
-      .getOrElse(throw new IllegalStateException(
-        s"version $version not available at $dir (never committed, or expired by vacuum)"))
-    val m = readManifest(fs, p)
-    readEntries(spark, dir, m.entries, m.schemaDdl, mappingOf(Some(m)))
-  }
+  def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame =
+    scan(spark, dir, manifestFor(spark, dir, Some(version)))
 
   /** Committed versions still readable (newest last). */
   def versions(spark: SparkSession, dir: String): Seq[Long] =
@@ -396,12 +394,7 @@ object SnapshotTable {
     * travel by VERSION AS OF only).
     */
   def versionAtTimestamp(spark: SparkSession, dir: String, tsMillis: Long): Long = {
-    val stamps = commitTimes(spark, dir)
-    if (stamps.isEmpty) throw new IllegalStateException(s"no committed snapshot at $dir")
-    val stamped = stamps.collect { case (v, Some(t)) => (v, t) }
-    if (stamped.isEmpty) throw new IllegalStateException(
-      s"snapshot at $dir has no commit timestamps (history predates commit-time stamps); " +
-        "time-travel by VERSION AS OF instead")
+    val stamped = commitStamps(spark, dir, "time-travel by VERSION AS OF instead")
     val hit = stamped.filter(_._2 <= tsMillis)
     if (hit.isEmpty) {
       val (v0, t0) = stamped.head
@@ -424,21 +417,25 @@ object SnapshotTable {
     * DROP retained history the caller asked for.
     */
   def versionSinceTimestamp(spark: SparkSession, dir: String, tsMillis: Long): Long = {
+    val stamped = commitStamps(spark, dir, "start the stream by startingVersion instead")
+    stamped.find(_._2 >= tsMillis).map(_._1).getOrElse(stamped.last._1 + 1)
+  }
+
+  /** (version, commit stamp) of every stamped retained version, oldest
+    * first. Refuses a table with no snapshot, and one whose retained
+    * history carries no stamp at all — `instead` names the caller's
+    * stamp-free alternative.
+    */
+  private def commitStamps(spark: SparkSession, dir: String,
+      instead: String): Seq[(Long, Long)] = {
     val stamps = commitTimes(spark, dir)
     if (stamps.isEmpty) throw new IllegalStateException(s"no committed snapshot at $dir")
     val stamped = stamps.collect { case (v, Some(t)) => (v, t) }
     if (stamped.isEmpty) throw new IllegalStateException(
       s"snapshot at $dir has no commit timestamps (history predates commit-time stamps); " +
-        "start the stream by startingVersion instead")
-    stamped.find(_._2 >= tsMillis).map(_._1).getOrElse(stamped.last._1 + 1)
+        instead)
+    stamped
   }
-
-  /** Time travel by wall clock: the table as of `tsMillis`
-    * ([[versionAtTimestamp]] semantics), with that version's schema and
-    * the same planner-integrated pruning as [[readTable]].
-    */
-  def readAsOfTimestamp(spark: SparkSession, dir: String, tsMillis: Long): DataFrame =
-    readTable(spark, dir, Some(versionAtTimestamp(spark, dir, tsMillis)))
 
   /** Table history, one row per retained version (newest last): live file
     * count, row count, total bytes, the delta vs the previous retained
@@ -481,10 +478,10 @@ object SnapshotTable {
     */
   def rollback(spark: SparkSession, dir: String, version: Long): Long = {
     val fs = fsFor(spark, dir)
-    val p = manifestVersions(fs, dir).collectFirst { case (v, path) if v == version => path }
-      .getOrElse(throw new IllegalStateException(
-        s"cannot roll back to version $version at $dir (never committed, or expired by vacuum)"))
-    val m = readManifest(fs, p)
+    val m = try manifestFor(spark, dir, Some(version)) catch {
+      case e: IllegalStateException =>
+        throw new IllegalStateException(s"cannot roll back: ${e.getMessage}", e)
+    }
     val missing = m.entries.filterNot(e => fs.exists(new Path(dir, e.path))) ++
       m.entries.flatMap(_.dv).filterNot(d => fs.exists(new Path(dir, d.path)))
         .map(d => FileEntry(d.path, 0L, 0L, None, None))
@@ -496,34 +493,25 @@ object SnapshotTable {
     commitLoop(spark, dir, op = "rollback")(_ => Some((m.entries, txnOf(Some(m)), m.schemaDdl))).get
   }
 
-  /** [[read]] restricted to files whose dt range intersects [lo, hi] (ISO
-    * date strings) — manifest-level file skipping: files outside the range
-    * are never opened, not even their footers. Files without dt stats are
-    * conservatively included.
-    */
-  def readDtRange(spark: SparkSession, dir: String, lo: String, hi: String): DataFrame = {
-    val m = snapshot(spark, dir)
-    val hit = m.entries.filter(e => (e.minDt, e.maxDt) match {
-      case (Some(mn), Some(mx)) => mn <= hi && mx >= lo
-      case _ => true
-    })
-    readEntries(spark, dir, hit, m.schemaDdl, mappingOf(Some(m)))
-  }
-
   private def snapshot(spark: SparkSession, dir: String): Manifest =
     currentManifest(spark, dir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $dir"))
 
-  /** Resolve a user predicate Column against the snapshot's recorded schema
-    * through the REAL analyzer, then constant-fold — yielding the coerced
-    * Catalyst tree [[FileStats.mayMatch]] walks. None (→ no pruning) for
-    * legacy manifests without a schema. A predicate that doesn't analyze
-    * (wrong column name, type error) fails here, loudly, before any I/O.
-    * Attribute names translate LOGICAL → PHYSICAL afterwards: footer
-    * stats are keyed by the names files store.
+  /** The manifest entries that MAY hold a row matching `pred`, judged from
+    * per-file column stats ([[FileStats.mayMatch]]); entries without stats
+    * are always kept. The candidate files of [[readWhere]] and of every
+    * row-level write.
+    *
+    * `pred` resolves against the snapshot's recorded schema through the
+    * REAL analyzer, then constant-folds — yielding the coerced Catalyst
+    * tree mayMatch walks; legacy manifests without a schema prune nothing.
+    * A predicate that doesn't analyze (wrong column name, type error)
+    * fails here, loudly, before any I/O. Attribute names translate
+    * LOGICAL → PHYSICAL afterwards: footer stats are keyed by the names
+    * files store.
     */
-  private def resolvePred(spark: SparkSession, m: Manifest,
-      pred: org.apache.spark.sql.Column): Option[Expression] =
+  private[graft] def pruneEntries(spark: SparkSession, m: Manifest,
+      pred: org.apache.spark.sql.Column): Seq[FileEntry] =
     m.schemaDdl.flatMap { ddl =>
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -531,15 +519,7 @@ object SnapshotTable {
       org.apache.spark.sql.graftbridge.Bridge.analyzedFilterCondition(empty.filter(pred))
         .map(FileStats.normalize)
         .map(toPhysicalExpr(_, mappingOf(Some(m))))
-    }
-
-  /** The manifest entries that MAY hold a row matching `pred`, judged from
-    * per-file column stats ([[FileStats.mayMatch]]); entries without stats
-    * are always kept. Exposed for tests to assert skip counts.
-    */
-  private[graft] def pruneEntries(spark: SparkSession, m: Manifest,
-      pred: org.apache.spark.sql.Column): Seq[FileEntry] =
-    resolvePred(spark, m, pred) match {
+    } match {
       case None => m.entries
       case Some(e) => m.entries.filter(en => en.stats.forall(FileStats.mayMatch(e, _, en.rows)))
     }
@@ -678,44 +658,34 @@ object SnapshotTable {
     }
   }
 
-  /** The manifest at `version` (None = current), for the relation layer. */
+  /** The manifest at `version` (None = current); a version never
+    * committed, or expired by vacuum, throws.
+    */
   private[graft] def manifestFor(spark: SparkSession, dir: String,
       version: Option[Long]): Manifest = version match {
     case None => snapshot(spark, dir)
     case Some(v) =>
       val fs = fsFor(spark, dir)
-      manifestVersions(fs, dir).collectFirst { case (mv, p) if mv == v => readManifest(fs, p) }
-        .getOrElse(throw new IllegalStateException(
-          s"version $v not available at $dir (never committed, or expired by vacuum)"))
+      readManifest(fs, manifestPath(fs, dir, v))
   }
 
-  /** The snapshot as a PLANNER-INTEGRATED relation
-    * ([[SnapshotFileIndex]]): any filter applied to the returned frame —
-    * DataFrame API, SQL over a temp view, join pushdowns — prunes manifest
-    * entries at planning time, with parquet row-group pushdown and column
-    * pruning composing on top. Pass `version` for time travel with the
-    * same pruning (files are immutable, so an old manifest's stats are as
-    * good as the current one's). The explicit [[readWhere]] stays for
-    * callers that want the pruned entry list itself; results are
-    * identical.
-    */
-  def readTable(spark: SparkSession, dir: String,
-      version: Option[Long] = None): DataFrame =
-    SnapshotRelation(spark, dir, version)
+  private def manifestPath(fs: FileSystem, dir: String, version: Long): Path =
+    manifestVersions(fs, dir).collectFirst { case (v, p) if v == version => p }
+      .getOrElse(throw new IllegalStateException(
+        s"version $version not available at $dir (never committed, or expired by vacuum)"))
 
   /** [[read]] restricted — at the MANIFEST level, before any footer is
     * opened — to files whose column stats admit a row matching `pred`; the
     * predicate is then still applied row-wise, so the result is exactly
-    * `read(...).filter(pred)`. This is the general form of [[readDtRange]]:
-    * the same skipping Snowflake does with micro-partition metadata and
-    * Delta with per-file stats, driven here by walking the predicate's
+    * `read(...).filter(pred)`, and `inputFiles` lists only the admitted
+    * files. The same skipping Snowflake does with micro-partition metadata
+    * and Delta with per-file stats, driven here by walking the predicate's
     * Catalyst expression tree against the manifest. Unsupported predicate
     * shapes skip nothing and stay correct.
     */
   def readWhere(spark: SparkSession, dir: String, pred: org.apache.spark.sql.Column): DataFrame = {
     val m = snapshot(spark, dir)
-    readEntries(spark, dir, pruneEntries(spark, m, pred), m.schemaDdl, mappingOf(Some(m)))
-      .filter(pred)
+    scan(spark, dir, m.copy(entries = pruneEntries(spark, m, pred))).filter(pred)
   }
 
   /** Row-level DELETE, copy-on-write: rewrite ONLY the files whose stats
@@ -733,12 +703,10 @@ object SnapshotTable {
   def delete(spark: SparkSession, dir: String, pred: org.apache.spark.sql.Column): Long =
     retryingRewrite(dir) {
       val m = snapshot(spark, dir)
-      val resolved = resolvePred(spark, m, pred)
-      val rewrite = m.entries.filter(
-        e => resolved.forall(r => e.stats.forall(FileStats.mayMatch(r, _, e.rows))))
+      val rewrite = pruneEntries(spark, m, pred)
       if (rewrite.isEmpty) 0L
       else {
-        val base = readEntries(spark, dir, rewrite, m.schemaDdl, mappingOf(Some(m)))
+        val base = scan(spark, dir, m.copy(entries = rewrite))
         val survivors = base.filter(!coalesce(pred, lit(false)))
         val entries = writeData(spark, survivors, dir, m.partitionCols.getOrElse(Seq.empty),
           mapping = mappingOf(Some(m)))
@@ -769,12 +737,10 @@ object SnapshotTable {
       pred: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Long = retryingRewrite(dir) {
     val m = snapshot(spark, dir)
-    val resolved = resolvePred(spark, m, pred)
-    val rewrite = m.entries.filter(
-      e => resolved.forall(r => e.stats.forall(FileStats.mayMatch(r, _, e.rows))))
+    val rewrite = pruneEntries(spark, m, pred)
     if (rewrite.isEmpty) 0L
     else {
-      val base = readEntries(spark, dir, rewrite, m.schemaDdl, mappingOf(Some(m)))
+      val base = scan(spark, dir, m.copy(entries = rewrite))
       val unknown = set.keySet -- base.columns.toSet
       require(unknown.isEmpty, s"UPDATE assigns columns not in the table: ${unknown.mkString(", ")}")
       val hit = coalesce(pred, lit(false))
@@ -802,47 +768,70 @@ object SnapshotTable {
     }
   }
 
-  private[catalog] def readEntries(spark: SparkSession, dir: String, entries: Seq[FileEntry],
-      schemaDdl: Option[String], mapping: Map[String, String] = Map.empty): DataFrame = {
-    if (entries.isEmpty && schemaDdl.isDefined)
+  /** THE snapshot scan: `m`'s entries (the whole snapshot, or any subset a
+    * caller pruned to) as a PLANNER-INTEGRATED relation — a
+    * [[SnapshotFileIndex]] under Spark's own parquet file scan. Every read
+    * of the table builds its frame here. Filters applied to the frame
+    * prune manifest entries at planning time, with parquet row-group
+    * pushdown and column pruning composing on top; planning never lists
+    * the filesystem.
+    *
+    * The relation reads the PHYSICAL schema (what the parquet footers
+    * store — [[Manifest.columnMapping]]) and one final aliasing Project
+    * restores the logical names; filters and pruning push straight
+    * through it. A legacy manifest without a recorded schema reads with
+    * the schema inferred from the footers; an empty entry list with one
+    * is an ordinary empty table.
+    *
+    * Deletion vectors apply here and nowhere else in the Scala read path:
+    * rows are tagged with [[PosFileCol]] (the file path in the form
+    * `_metadata.file_path` reports) and [[PosIdxCol]] (Spark's native
+    * parquet `_metadata.row_index`, correct under row-group skipping) and
+    * anti-joined against the vectors. The tags cost a metadata read, so
+    * they exist only when a vector does or when `positions` asks for them
+    * (the merge-on-read writers locate rows by them); with `positions` the
+    * frame keeps them, and the next MoR delete's positions are therefore
+    * always disjoint from the already-deleted set.
+    */
+  private[catalog] def scan(spark: SparkSession, dir: String, m: Manifest,
+      positions: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.types.StructType
+    if (m.entries.isEmpty && m.schemaDdl.isDefined)
       // a fully-pruned (or fully-deleted) snapshot with a recorded schema is
       // an ordinary empty table, not an error (the LOGICAL schema — users
       // never see physical names)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schemaDdl.get))
-    require(entries.nonEmpty,
+        StructType.fromDDL(m.schemaDdl.get))
+    require(m.entries.nonEmpty,
       s"snapshot at $dir has no data files matching the requested range")
-    if (entries.forall(_.dv.isEmpty)) // the common case: plan untouched
-      logicalize(readEntriesPlain(spark, dir, entries, schemaDdl, mapping), mapping)
-    else withPosAndDv(spark, dir, entries, schemaDdl, mapping).drop(PosFileCol, PosIdxCol)
-  }
-
-  /** Read the raw files under the PHYSICAL schema — what the parquet
-    * footers actually store; [[logicalize]] renames the frame back for
-    * every consumer above this line.
-    */
-  private def readEntriesPlain(spark: SparkSession, dir: String, entries: Seq[FileEntry],
-      schemaDdl: Option[String], mapping: Map[String, String] = Map.empty): DataFrame = {
-    val reader = schemaDdl match {
-      case Some(ddl) => spark.read.schema(physicalSchema(
-        org.apache.spark.sql.types.StructType.fromDDL(ddl), mapping))
-      case None => spark.read // legacy manifest: infer from footers
+    val mapping = mappingOf(Some(m))
+    val index = new SnapshotFileIndex(spark, dir, m)
+    val fileSchema = m.schemaDdl match {
+      case Some(ddl) => physicalSchema(StructType.fromDDL(ddl), mapping)
+      case None => new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+        .inferSchema(spark, Map.empty, index.allFiles())
+        .getOrElse(throw new IllegalStateException(s"cannot infer the schema of $dir"))
     }
-    reader.parquet(entries.map(e => new Path(dir, e.path).toString): _*)
-  }
-
-  /** Rename a physical-named frame's columns back to their logical names
-    * (non-mapped columns — including scan-internal position tags — pass
-    * through). A pure positional rename: the plan gains one Project that
-    * filters and pruning push straight through.
-    */
-  private def logicalize(df: DataFrame, mapping: Map[String, String]): DataFrame =
-    if (mapping.isEmpty) df
+    // nullable like every file source's schema: manifests written before
+    // mergeSchemas nullable-ized appended columns would otherwise hide
+    // pre-evolution NULLs
+    val plain = org.apache.spark.sql.graftbridge.Bridge.parquetRelation(spark, index, fileSchema)
+    val dvEntries = m.entries.filter(_.dv.isDefined)
+    val live =
+      if (!positions && dvEntries.isEmpty) plain // the common case: no tags
+      else {
+        val tagged = plain.select(col("*"),
+          col("_metadata.file_path").as(PosFileCol), col("_metadata.row_index").as(PosIdxCol))
+        val kept = if (dvEntries.isEmpty) tagged else withoutDeleted(spark, dir, tagged, dvEntries)
+        if (positions) kept else kept.drop(PosFileCol, PosIdxCol)
+      }
+    if (mapping.isEmpty) live
     else {
       val reverse = mapping.map(_.swap) // physical → logical; injective by construction
-      df.select(df.columns.map(c =>
+      live.select(live.columns.map(c =>
         reverse.get(c).map(l => col(s"`$c`").as(l)).getOrElse(col(s"`$c`"))).toSeq: _*)
     }
+  }
 
   // ------------------------------------------------- deletion-vector tier
 
@@ -859,42 +848,49 @@ object SnapshotTable {
   private def posFileForm(qualified: Path, rel: String): String =
     org.apache.spark.paths.SparkPath.fromPath(new Path(qualified, rel)).toString
 
-  /** Entries read with per-row provenance — `__dv_file` (qualified file
-    * path) and `__dv_pos` (true 0-based row position, Spark's native
-    * parquet `_metadata.row_index`, correct under row-group skipping) —
-    * with every referenced deletion vector ALREADY APPLIED, so callers see
-    * only live rows. This is both the DV read path and the position source
-    * for the NEXT merge-on-read delete (whose positions are therefore
-    * always disjoint from the already-deleted set).
+  /** `tagged` minus the rows at the positions `dvEntries`' vectors delete:
+    * a left anti-join on ([[PosFileCol]], [[PosIdxCol]]). Data filters
+    * still push THROUGH the join to the scan (it only consumes the tag
+    * columns); the build side is the deleted-position set — usually tiny
+    * relative to data, so it is broadcast while it plausibly fits and
+    * shuffled past that.
     */
-  private def withPosAndDv(spark: SparkSession, dir: String, entries: Seq[FileEntry],
-      schemaDdl: Option[String], mapping: Map[String, String] = Map.empty): DataFrame = {
-    val plain = readEntriesPlain(spark, dir, entries, schemaDdl, mapping)
-    // metadata tagging happens on the raw file frame (metadata columns
-    // resolve against the relation); the logical rename projects on top
-    val tagged = logicalize(plain.select(col("*"),
-      col("_metadata.file_path").as(PosFileCol), col("_metadata.row_index").as(PosIdxCol)),
-      mapping)
-    val dvEntries = entries.filter(_.dv.isDefined)
-    if (dvEntries.isEmpty) tagged
-    else {
-      val dvFrame = dvPositions(spark, dir, dvEntries)
-      val totalDeleted = dvEntries.map(_.dv.get.deleted).sum
-      // deleted-position sets are usually tiny relative to data; broadcast
-      // the anti-join build side while it plausibly fits, shuffle past that
-      val build = if (totalDeleted <= 5000000L) broadcast(dvFrame) else dvFrame
-      tagged.join(build, Seq(PosFileCol, PosIdxCol), "left_anti")
-    }
+  private def withoutDeleted(spark: SparkSession, dir: String, tagged: DataFrame,
+      dvEntries: Seq[FileEntry]): DataFrame = {
+    val deleted = dvPositions(spark, dir, dvEntries.map(e => (e, e.dv.map(_.path), None)))
+    val totalDeleted = dvEntries.map(_.dv.get.deleted).sum
+    val build = if (totalDeleted <= 5000000L) broadcast(deleted) else deleted
+    tagged.join(build, Seq(PosFileCol, PosIdxCol), "left_anti")
   }
 
-  /** (qualified file path, deleted position) rows of `dvEntries`' blobs —
-    * blob bytes load on EXECUTORS (one tiny sequential read per file's
+  /** The rows of `triples`' files at positions in (plus − minus), where
+    * plus/minus are deletion-vector blob paths (None = empty set) — the
+    * change-feed primitive: a MoR delete's newly-hidden rows are
+    * (curDv − prevDv), a rollback's restored rows are (prevDv − curDv).
+    * Reads the files with NO vector applied (the diffed rows are by
+    * definition hidden from a normal read on one side) under `m`'s schema,
+    * and inner-joins the position diff; cost is O(diffed files) reads and
+    * O(diff) join rows.
+    */
+  private[catalog] def rowsAtDvDiff(spark: SparkSession, dir: String,
+      triples: Seq[(FileEntry, Option[String], Option[String])], m: Manifest): DataFrame = {
+    val nonEmpty = triples.filter { case (_, plus, minus) => plus != minus }
+    if (nonEmpty.isEmpty)
+      return scan(spark, dir, m.copy(entries = Seq.empty)) // empty frame, right schema
+    scan(spark, dir, m.copy(entries = nonEmpty.map(_._1.copy(dv = None))), positions = true)
+      .join(broadcast(dvPositions(spark, dir, nonEmpty)), Seq(PosFileCol, PosIdxCol))
+      .drop(PosFileCol, PosIdxCol)
+  }
+
+  /** ([[PosFileCol]], [[PosIdxCol]]) rows of the positions in each triple's
+    * `plus` vector and not in its `minus` vector (blob paths; None = empty
+    * set). Blob bytes load on EXECUTORS (one tiny sequential read per
     * blob), never on the driver.
     */
-  private[catalog] def dvPositions(spark: SparkSession, dir: String,
-      dvEntries: Seq[FileEntry]): DataFrame = {
-    val qualified = qualifiedDir(spark, dir)
-    val refs = dvEntries.map(e => (posFileForm(qualified, e.path), e.dv.get.path))
+  private def dvPositions(spark: SparkSession, dir: String,
+      triples: Seq[(FileEntry, Option[String], Option[String])]): DataFrame = {
+    val q = qualifiedDir(spark, dir)
+    val refs = triples.map { case (e, plus, minus) => (posFileForm(q, e.path), plus, minus) }
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val dirStr = dir
@@ -902,49 +898,13 @@ object SnapshotTable {
     spark.createDataset(refs)
       .mapPartitions { it =>
         lazy val fs = new Path(dirStr).getFileSystem(conf.value)
-        it.flatMap { case (f, rel) =>
-          readDvBlob(fs, new Path(dirStr, rel)).iterator.map(p => (f, p)) }
-      }
-      .toDF(PosFileCol, PosIdxCol)
-  }
-
-  /** The rows of `triples`' files at positions in (plus − minus), where
-    * plus/minus are deletion-vector blob paths (None = empty set) — the
-    * change-feed primitive: a MoR delete's newly-hidden rows are
-    * (curDv − prevDv), a rollback's restored rows are (prevDv − curDv).
-    * Reads the files PLAIN (no vector applied — the diffed rows are by
-    * definition hidden from a normal read on one side) and inner-joins the
-    * executor-loaded position diff; cost is O(diffed files) reads and
-    * O(diff) join rows.
-    */
-  private[catalog] def rowsAtDvDiff(spark: SparkSession, dir: String,
-      triples: Seq[(FileEntry, Option[String], Option[String])],
-      schemaDdl: Option[String], mapping: Map[String, String] = Map.empty): DataFrame = {
-    val nonEmpty = triples.filter { case (_, plus, minus) => plus != minus }
-    if (nonEmpty.isEmpty)
-      return readEntries(spark, dir, Seq.empty, schemaDdl) // empty frame, right schema
-    val tagged = logicalize(readEntriesPlain(spark, dir, nonEmpty.map(_._1), schemaDdl, mapping)
-      .select(col("*"),
-        col("_metadata.file_path").as(PosFileCol), col("_metadata.row_index").as(PosIdxCol)),
-      mapping)
-    val q = qualifiedDir(spark, dir)
-    val refs = nonEmpty.map { case (e, plus, minus) =>
-      (posFileForm(q, e.path), plus, minus) }
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val dirStr = dir
-    import spark.implicits._
-    val diff = spark.createDataset(refs)
-      .mapPartitions { it =>
-        lazy val fs = new Path(dirStr).getFileSystem(conf.value)
-        def posOf(rel: Option[String]): Set[Long] =
-          rel.map(r => readDvBlob(fs, new Path(dirStr, r)).toSet).getOrElse(Set.empty)
+        def posOf(rel: Option[String]): Array[Long] =
+          rel.map(r => readDvBlob(fs, new Path(dirStr, r))).getOrElse(Array.empty[Long])
         it.flatMap { case (f, plus, minus) =>
-          (posOf(plus) -- posOf(minus)).iterator.map(p => (f, p)) }
+          val minusSet = posOf(minus).toSet
+          posOf(plus).iterator.filterNot(minusSet).map(p => (f, p)) }
       }
       .toDF(PosFileCol, PosIdxCol)
-    tagged.join(broadcast(diff), Seq(PosFileCol, PosIdxCol))
-      .drop(PosFileCol, PosIdxCol)
   }
 
   /** Blob wire format: one signed big-endian int count, then that many
@@ -981,34 +941,19 @@ object SnapshotTable {
   def deleteMoR(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column): Long = retryingRewrite(dir) {
     val m = snapshot(spark, dir)
-    val resolved = resolvePred(spark, m, pred)
-    val candidates = m.entries.filter(
-      e => resolved.forall(r => e.stats.forall(FileStats.mayMatch(r, _, e.rows))))
+    val candidates = pruneEntries(spark, m, pred)
     if (candidates.isEmpty) 0L
     else {
-      val matched = withPosAndDv(spark, dir, candidates, m.schemaDdl, mappingOf(Some(m)))
+      val matched = scan(spark, dir, m.copy(entries = candidates), positions = true)
         .filter(coalesce(pred, lit(false)))
         .select(col(PosFileCol), col(PosIdxCol))
       val commitName = "c-" + java.util.UUID.randomUUID().toString.take(12)
       val touched = writeDvBlobs(spark, dir, commitName, matched, candidates)
       if (touched.isEmpty) 0L
       else {
-        val byPath = touched.map(t => t.path -> t).toMap
-        val newlyDeleted = touched.map(t =>
-          t.dv.deleted - byPath(t.path).priorDeleted).sum
+        val newlyDeleted = touched.map(t => t.dv.deleted - t.priorDeleted).sum
         commitLoop(spark, dir, op = "delete") { cur =>
-          val curEntries = cur.map(_.entries).getOrElse(Seq.empty)
-          val curByPath = curEntries.map(e => e.path -> e).toMap
-          // serializability: every touched file must still be live with the
-          // SAME vector this delete merged from — a winner that rewrote the
-          // file or attached its own vector invalidates this blob
-          byPath.values.foreach { t =>
-            val curE = curByPath.getOrElse(t.path, throw new SnapshotConflictException(
-              s"concurrent commit at $dir removed ${t.path} this MoR delete read; re-running"))
-            if (curE.dv.map(_.path) != t.priorDv) throw new SnapshotConflictException(
-              s"concurrent commit at $dir changed the deletion vector of ${t.path}; re-running")
-          }
-          Some((curEntries.map(e => byPath.get(e.path).fold(e)(t => e.copy(dv = Some(t.dv)))),
+          Some((withVectors(dir, cur, touched, "MoR delete"),
             txnOf(cur), cur.flatMap(_.schemaDdl).orElse(m.schemaDdl)))
         }
         newlyDeleted
@@ -1028,12 +973,10 @@ object SnapshotTable {
       pred: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Long = retryingRewrite(dir) {
     val m = snapshot(spark, dir)
-    val resolved = resolvePred(spark, m, pred)
-    val candidates = m.entries.filter(
-      e => resolved.forall(r => e.stats.forall(FileStats.mayMatch(r, _, e.rows))))
+    val candidates = pruneEntries(spark, m, pred)
     if (candidates.isEmpty) 0L
     else {
-      val base = withPosAndDv(spark, dir, candidates, m.schemaDdl, mappingOf(Some(m)))
+      val base = scan(spark, dir, m.copy(entries = candidates), positions = true)
       val dataCols = base.columns.filterNot(c => c == PosFileCol || c == PosIdxCol).toSeq
       val unknown = set.keySet -- dataCols.toSet
       require(unknown.isEmpty,
@@ -1060,18 +1003,8 @@ object SnapshotTable {
           val nUpdated = touched.map(t => t.dv.deleted - t.priorDeleted).sum
           val newEntries = writeData(spark, updated, dir, m.partitionCols.getOrElse(Seq.empty),
             mapping = mappingOf(Some(m)))
-          val byPath = touched.map(t => t.path -> t).toMap
           commitLoop(spark, dir, op = "update") { cur =>
-            val curEntries = cur.map(_.entries).getOrElse(Seq.empty)
-            val curByPath = curEntries.map(e => e.path -> e).toMap
-            byPath.values.foreach { t =>
-              val curE = curByPath.getOrElse(t.path, throw new SnapshotConflictException(
-                s"concurrent commit at $dir removed ${t.path} this MoR update read; re-running"))
-              if (curE.dv.map(_.path) != t.priorDv) throw new SnapshotConflictException(
-                s"concurrent commit at $dir changed the deletion vector of ${t.path}; re-running")
-            }
-            Some((curEntries.map(e => byPath.get(e.path).fold(e)(t => e.copy(dv = Some(t.dv))))
-              ++ newEntries,
+            Some((withVectors(dir, cur, touched, "MoR update") ++ newEntries,
               txnOf(cur), cur.flatMap(_.schemaDdl).orElse(m.schemaDdl)))
           }
           nUpdated
@@ -1086,6 +1019,26 @@ object SnapshotTable {
     */
   private case class DvTouch(path: String, dv: DvRef,
       priorDv: Option[String], priorDeleted: Long)
+
+  /** `cur`'s entries with `touched`'s new vectors attached — the publish
+    * step of every merge-on-read commit. Serializability: every touched
+    * file must still be live with the SAME vector the op (`what`) merged
+    * from; a winner that rewrote the file or attached its own vector
+    * invalidates the blob, and the op re-runs.
+    */
+  private def withVectors(dir: String, cur: Option[Manifest], touched: Seq[DvTouch],
+      what: String): Seq[FileEntry] = {
+    val curEntries = cur.map(_.entries).getOrElse(Seq.empty)
+    val curByPath = curEntries.map(e => e.path -> e).toMap
+    touched.foreach { t =>
+      val curE = curByPath.getOrElse(t.path, throw new SnapshotConflictException(
+        s"concurrent commit at $dir removed ${t.path} this $what read; re-running"))
+      if (curE.dv.map(_.path) != t.priorDv) throw new SnapshotConflictException(
+        s"concurrent commit at $dir changed the deletion vector of ${t.path}; re-running")
+    }
+    val byPath = touched.map(t => t.path -> t).toMap
+    curEntries.map(e => byPath.get(e.path).fold(e)(t => e.copy(dv = Some(t.dv))))
+  }
 
   /** Group `matched` (qualified path, position) rows by file and write ONE
     * merged blob per touched file into `commitName/` — executor-side:
@@ -1295,7 +1248,7 @@ object SnapshotTable {
       cur: Option[Manifest]): Option[org.apache.spark.sql.types.StructType] =
     cur.flatMap { m =>
       m.schemaDdl.map(org.apache.spark.sql.types.StructType.fromDDL)
-        .orElse(if (m.entries.nonEmpty) Some(readEntries(spark, dir, m.entries, None).schema)
+        .orElse(if (m.entries.nonEmpty) Some(scan(spark, dir, m).schema)
         else None)
     }
 
@@ -1516,7 +1469,7 @@ object SnapshotTable {
     // the existing rows must satisfy it (reads apply deletion vectors, so
     // already-deleted rows cannot block a constraint)
     enforceConstraints(spark,
-      readEntries(spark, dir, m.entries, m.schemaDdl, mappingOf(Some(m))),
+      scan(spark, dir, m),
       Map(name -> predicateSql),
       s"existing data at $dir")
     commitLoop(spark, dir, op = "alter", reviseConstraints = cur => {
@@ -1623,7 +1576,7 @@ object SnapshotTable {
     // definition, like txn markers) — so the staged result must satisfy
     // them; a refusal aborts to nothing, the staged files stay invisible
     currentManifest(spark, dir).flatMap(_.constraints).foreach(cs =>
-      enforceConstraints(spark, readEntries(spark, dir, entries, Some(schemaDdl)),
+      enforceConstraints(spark, scan(spark, dir, Manifest(0L, entries, schemaDdl = Some(schemaDdl))),
         cs, s"REPLACE TABLE AS SELECT of $dir"))
     commitLoop(spark, dir, op = "write",
       // CTAS/RTAS define the partition spec like they define the schema;
@@ -1737,10 +1690,11 @@ object SnapshotTable {
     // the epoch's files are already on disk (executors wrote them) but
     // unreferenced — validating by reading them back costs one pass over
     // the BATCH, and a refusal leaves only vacuum-reclaimable orphans
-    currentManifest(spark, dir).flatMap(_.constraints).foreach(cs =>
-      enforceConstraints(spark, readEntries(spark, dir, entries, Some(schema.toDDL),
-        mappingOf(currentManifest(spark, dir))),
-        cs, s"streaming epoch $batchId into $dir"))
+    val cur0 = currentManifest(spark, dir)
+    cur0.flatMap(_.constraints).foreach(cs => enforceConstraints(spark,
+      scan(spark, dir, Manifest(0L, entries, schemaDdl = Some(schema.toDDL),
+        columnMapping = cur0.flatMap(_.columnMapping))),
+      cs, s"streaming epoch $batchId into $dir"))
     commitLoop(spark, dir, op = "append") { cur =>
       if (txnOf(cur).get(appId).exists(_ >= batchId)) None
       else {
@@ -1775,8 +1729,8 @@ object SnapshotTable {
     val before = manifestAt(fromVersion).map(_.entries).getOrElse(Seq.empty).map(_.path).toSet
     val to = manifestAt(toVersion).get
     val added = to.entries.filterNot(e => before.contains(e.path))
-    if (added.nonEmpty) readEntries(spark, dir, added, to.schemaDdl, mappingOf(Some(to)))
-    else readEntries(spark, dir, to.entries, to.schemaDdl, mappingOf(Some(to)))
+    if (added.nonEmpty) scan(spark, dir, to.copy(entries = added))
+    else scan(spark, dir, to)
       .limit(0) // no new files: empty frame, right schema
   }
 
@@ -1857,7 +1811,7 @@ object SnapshotTable {
           })
           val base =
             if (rewrite.isEmpty) batch.limit(0)
-            else readEntries(spark, dir, rewrite, m.schemaDdl, mappingOf(Some(m)))
+            else scan(spark, dir, m.copy(entries = rewrite))
           val out = IncrementalLoader.upsert(base, batch, keys)
           // refuse type-changing batches BEFORE the rewrite, and record the
           // (additively) merged schema — committing the old DDL over files
@@ -1980,10 +1934,7 @@ object SnapshotTable {
   def lastTxnAt(spark: SparkSession, dir: String, version: Long,
       appId: String): Option[Long] = {
     val fs = fsFor(spark, dir)
-    val p = manifestVersions(fs, dir).collectFirst { case (v, path) if v == version => path }
-      .getOrElse(throw new IllegalStateException(
-        s"version $version not available at $dir (never committed, or expired by vacuum)"))
-    parseManifest(fs, p).txn.getOrElse(Map.empty).get(appId)
+    parseManifest(fs, manifestPath(fs, dir, version)).txn.getOrElse(Map.empty).get(appId)
   }
 
   /** An EMPTY txn-carrying merge still RECORDS its marker, as a
@@ -2072,7 +2023,7 @@ object SnapshotTable {
           val rewrite = m.entries.filter(hitFile)
           val base =
             if (rewrite.isEmpty) aligned.limit(0)
-            else readEntries(spark, dir, rewrite, m.schemaDdl, mappingOf(Some(m)))
+            else scan(spark, dir, m.copy(entries = rewrite))
           // under the cap, the footprint collect IS the anti-join's build
           // side: a local relation of the batch's distinct keys, broadcast —
           // the batch plan is never re-evaluated for the join and the build
@@ -2194,7 +2145,7 @@ object SnapshotTable {
           val touched =
             if (candidates.isEmpty) Seq.empty[DvTouch]
             else {
-              val base = withPosAndDv(spark, dir, candidates, m.schemaDdl, mappingOf(Some(m)))
+              val base = scan(spark, dir, m.copy(entries = candidates), positions = true)
               // under the cap, the footprint collect IS the semi-join's
               // build side (same reuse as the COW path); deleteKeys rows
               // vector out exactly like matches — they are just never
@@ -2215,23 +2166,14 @@ object SnapshotTable {
             aligned.coalesce(mergeOutParts(Seq.empty, n.toLong, avgRowHint = tableAvgRow(m))))
           val newEntries = writeData(spark, alignedSized, dir,
             m.partitionCols.getOrElse(Seq.empty), mapping = mappingOf(Some(m)))
-          val byPath = touched.map(t => t.path -> t).toMap
           val basePaths = m.entries.map(_.path).toSet
           commitLoop(spark, dir, op = "merge", knownCurrent = Some(m)) { cur =>
             // raced delivery of the SAME batch: abandon, winner already did it
             if (txn.exists { case (app, b) => txnOf(cur).get(app).exists(_ >= b) }) None
             else {
-              val curEntries = cur.map(_.entries).getOrElse(Seq.empty)
-              val curByPath = curEntries.map(e => e.path -> e).toMap
-              // MoR serializability: every touched file still live, same vector
-              byPath.values.foreach { t =>
-                val curE = curByPath.getOrElse(t.path, throw new SnapshotConflictException(
-                  s"concurrent commit at $dir removed ${t.path} this MoR merge read; re-running"))
-                if (curE.dv.map(_.path) != t.priorDv) throw new SnapshotConflictException(
-                  s"concurrent commit at $dir changed the deletion vector of ${t.path}; re-running")
-              }
+              val vectored = withVectors(dir, cur, touched, "MoR merge")
               // key-uniqueness serializability: adds inside the footprint conflict
-              val addedSince = curEntries.filterNot(e => basePaths.contains(e.path))
+              val addedSince = vectored.filterNot(e => basePaths.contains(e.path))
               val overlap = addedSince.filter(hitFile)
               if (overlap.nonEmpty) throw new SnapshotConflictException(
                 s"concurrent commit at $dir added ${overlap.length} file(s) intersecting this " +
@@ -2239,9 +2181,7 @@ object SnapshotTable {
                   "re-running the merge against the new snapshot")
               val mergedNow = mergeSchemas(priorSchema(spark, dir, cur), aligned.schema,
                 reservedPhysicals(cur))
-              Some((curEntries.map(e => byPath.get(e.path).fold(e)(t => e.copy(dv = Some(t.dv))))
-                ++ newEntries,
-                txnOf(cur) ++ txnMap, Some(mergedNow.toDDL)))
+              Some((vectored ++ newEntries, txnOf(cur) ++ txnMap, Some(mergedNow.toDDL)))
             }
           }.getOrElse(versions(spark, dir).max)
       }
@@ -2527,7 +2467,7 @@ object SnapshotTable {
         return (m.entries.length, m.entries.length)
       val totalBytes = rewrite.map(_.bytes).sum
       val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-      val base = readEntries(spark, dir, rewrite, m.schemaDdl, mappingOf(Some(m)))
+      val base = scan(spark, dir, m.copy(entries = rewrite))
       val pcols = m.partitionCols.getOrElse(Seq.empty)
       // z-order sort key: the raw column for one (repartitionByRange
       // handles any orderable type), the range-normalized Morton value
@@ -3014,7 +2954,7 @@ object SnapshotTable {
     // orphans for vacuum
     base.constraints.foreach(cs =>
       enforceConstraints(spark,
-        readEntries(spark, dir, added, base.schemaDdl, mappingOf(Some(base))),
+        scan(spark, dir, base.copy(entries = added)),
         cs, s"row-level $op of $dir"))
     commitLoop(spark, dir, op) { cur =>
       if (conflictOnAdds) {

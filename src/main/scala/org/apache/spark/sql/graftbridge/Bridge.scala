@@ -21,6 +21,22 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A parquet relation over `index`, resolved the way
+    * `spark.read.schema(dataSchema).parquet(...)` resolves one: the data
+    * schema is made nullable (`StructType.asNullable`, `private[spark]`)
+    * as `DataSource.resolveRelation` does for every file source.
+    */
+  def parquetRelation(spark: SparkSession,
+      index: org.apache.spark.sql.execution.datasources.FileIndex,
+      dataSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    ofRows(spark, LogicalRelation(HadoopFsRelation(index,
+      partitionSchema = new org.apache.spark.sql.types.StructType(),
+      dataSchema = dataSchema.asNullable, bucketSpec = None,
+      fileFormat = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      options = Map.empty)(spark.asInstanceOf[classic.SparkSession]), isStreaming = false))
+  }
+
   /** The ANALYZED Catalyst condition of `df`'s top-level Filter — the input
     * the manifest-level file skipper walks. Spark 4's classic `Column` is a
     * tree of connect-style ColumnNodes (`UnresolvedFunction(">=", …)`), not

@@ -235,7 +235,7 @@ class DataSkippingSpec extends SparkSpec {
     assert(st("id").kind == "num" && st("id").lo.get.toDouble == 0.0 &&
       st("id").hi.get.toDouble == 9.0 && st("id").nulls == 0L)
     assert(st("dt").kind == "str" && st("dt").lo.contains("2024-06-01"))
-    // dt pair still derives for the legacy merge/readDtRange paths
+    // dt pair still derives for merge's dt-scoped rewrite set
     assert(m.entries.head.minDt.contains("2024-06-01"))
     // entries without stats (pre-stats manifests) are always kept
     val legacy = m.copy(entries = m.entries.map(_.copy(stats = None)))

@@ -57,7 +57,6 @@ class DeletionVectorSpec extends SparkSpec {
       concat(lit("payload-"), col("id")).as("s")).filter(col("grp") =!= 3L)
     for ((label, df) <- Seq(
         "SnapshotTable.read" -> SnapshotTable.read(spark, dir),
-        "readTable (planner relation)" -> SnapshotTable.readTable(spark, dir),
         "SQL catalog" -> spark.sql(s"SELECT * FROM snap.mor.t"))) {
       assert(df.count() == 10000 - n, s"$label count")
       assert(df.exceptAll(want).isEmpty && want.exceptAll(df).isEmpty, s"$label content")
@@ -237,7 +236,6 @@ class DeletionVectorSpec extends SparkSpec {
     assert(n == 400, s"deleted count: $n")
     for ((label, df) <- Seq(
         "SnapshotTable.read" -> SnapshotTable.read(spark, dir),
-        "readTable (planner relation)" -> SnapshotTable.readTable(spark, dir),
         "SQL catalog" -> spark.sql(s"SELECT * FROM snap.`$dir`"))) {
       assert(df.count() == 3600, s"$label must hide vectored rows")
       assert(df.filter(col("v") % 10 === 0).count() == 0,

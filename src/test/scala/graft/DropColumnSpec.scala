@@ -47,7 +47,7 @@ class DropColumnSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, dir).schema.fieldNames.toSeq == Seq("id", "keep", "g"))
 
     // time travel to a pre-drop version still reads the column
-    val pinned = SnapshotTable.readTable(spark, dir, Some(before.version))
+    val pinned = SnapshotTable.readVersion(spark, dir, before.version)
     assert(pinned.schema.fieldNames.contains("junk"))
     assert(pinned.agg(sum("junk")).head.getLong(0) == (0L until 500L).map(_ * 3).sum)
   }

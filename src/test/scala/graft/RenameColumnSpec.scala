@@ -67,7 +67,7 @@ class RenameColumnSpec extends SparkSpec {
     assert(desc.contains("amount->v"), s"mapping must be observable:\n$desc")
 
     // time travel: the pre-rename version still reads the OLD name
-    val pinned = SnapshotTable.readTable(spark, dir, Some(before.version))
+    val pinned = SnapshotTable.readVersion(spark, dir, before.version)
     assert(pinned.columns.toSeq == Seq("id", "v", "g"))
     assert(pinned.agg(sum("v")).head.getLong(0) == (0L until 500L).map(_ * 2).sum)
   }
@@ -84,7 +84,7 @@ class RenameColumnSpec extends SparkSpec {
     assert(survivors.size < m.entries.size,
       s"stats pruning must survive the rename: ${survivors.size} of ${m.entries.size}")
     // and via the planner-integrated relation too (DSv1 path)
-    assert(SnapshotTable.readTable(spark, dir).filter(col("amount") === 4000L).count() == 1)
+    assert(SnapshotTable.read(spark, dir).filter(col("amount") === 4000L).count() == 1)
 
     // DSv2 SQL path: the filter on the LOGICAL name must reach the parquet
     // scan under the PHYSICAL name — row-group pushdown, not a post-scan

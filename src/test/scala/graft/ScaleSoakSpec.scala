@@ -1233,11 +1233,29 @@ object SoakReport {
     flush()
   }
 
+  private val artifact = java.nio.file.Paths.get("SOAK.json")
+
+  /** The entries already in the artifact, rendered like [[record]]'s: a
+    * run that measures only some soaks replaces only their entries.
+    */
+  private lazy val prior: Map[String, String] =
+    if (!java.nio.file.Files.exists(artifact)) Map.empty
+    else {
+      import org.json4s._
+      import org.json4s.jackson.JsonMethods.{compact, parse, render}
+      parse(new String(java.nio.file.Files.readAllBytes(artifact),
+        java.nio.charset.StandardCharsets.UTF_8)) match {
+        case JObject(fields) => fields.collect {
+          case (k, v) if k != "sf_base" && k != "factors" => k -> s""""$k":${compact(render(v))}"""
+        }.toMap
+        case _ => Map.empty
+      }
+    }
+
   private def flush(): Unit = {
     import scala.jdk.CollectionConverters._
-    val body = results.asScala.toSeq.sortBy(_._1).map(_._2).mkString(",")
+    val body = (prior ++ results.asScala).toSeq.sortBy(_._1).map(_._2).mkString(",")
     val json = s"""{"sf_base":"/root/testdata/sf0.1","factors":[1,4],$body}""" + "\n"
-    java.nio.file.Files.write(java.nio.file.Paths.get("SOAK.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.write(artifact, json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 }

@@ -11,7 +11,7 @@ import graft.catalog.{SnapshotCatalog, SnapshotTable}
 /** The snapshot table through PURE SQL: a DataSourceV2 catalog resolving
   * `snap.<ident>` (and backtick-quoted absolute paths), `VERSION AS OF`
   * time travel via the DSv2 loadTable(ident, version) contract, and the
-  * same manifest-stats file pruning the Scala readTable API gets — all
+  * same manifest-stats file pruning the Scala read API gets — all
   * asserted from scan metrics and row equality against the Scala reads.
   */
 class SnapshotCatalogSpec extends SparkSpec {
@@ -504,12 +504,13 @@ class SnapshotCatalogSpec extends SparkSpec {
       s"SELECT count(*) AS n FROM snap.tt.clock TIMESTAMP AS OF '${sqlLit(ts(2) + 60000)}'")
     assert(afterV3.head().getLong(0) == 260, "a later timestamp reads the latest version")
 
-    // the Scala mirror resolves identically (and readAsOfTimestamp reads it)
+    // the Scala mirror resolves identically (and readVersion reads it)
     val versions = SnapshotTable.versions(spark, dir)
     assert(SnapshotTable.versionAtTimestamp(spark, dir, ts(1)) == versions(1))
     if (ts(2) - ts(1) > 1) // between-commit instant exists only when stamps aren't adjacent
       assert(SnapshotTable.versionAtTimestamp(spark, dir, ts(2) - 1) == versions(1))
-    assert(SnapshotTable.readAsOfTimestamp(spark, dir, ts.head).count() == 100)
+    assert(SnapshotTable.readVersion(spark, dir,
+      SnapshotTable.versionAtTimestamp(spark, dir, ts.head)).count() == 100)
 
     // pre-history: refused by name, never clamped to v1
     val pre = intercept[Exception](spark.sql(

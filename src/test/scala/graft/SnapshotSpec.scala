@@ -70,12 +70,12 @@ class SnapshotSpec extends SparkSpec {
     assert(got.filter(col("id") === 9999L && col("v") === -2L).count() == 1L)
   }
 
-  test("readDtRange skips files by manifest stats alone") {
+  test("readWhere on a dt range skips files by manifest stats alone") {
     val dir = tmpTable()
     SnapshotTable.write(spark, sampleDf(40, "2024-01-01"), dir)
     SnapshotTable.append(spark, sampleDf(40, "2024-06-01").withColumn("id", col("id") + 100), dir)
     val all = SnapshotTable.read(spark, dir)
-    val june = SnapshotTable.readDtRange(spark, dir, "2024-06-01", "2024-06-30")
+    val june = SnapshotTable.readWhere(spark, dir, col("dt").between("2024-06-01", "2024-06-30"))
     assert(june.inputFiles.length < all.inputFiles.length,
       s"dt-range read must open fewer files (${june.inputFiles.length} vs ${all.inputFiles.length})")
     assert(june.count() == 40L && june.agg(min("dt")).collect().head.getDate(0).toString >= "2024-06-01")

@@ -62,7 +62,6 @@ class TypeWideningSpec extends SparkSpec {
     // every read path sees the same widened rows across narrow + wide files
     for ((label, df) <- Seq(
         "SnapshotTable.read" -> SnapshotTable.read(spark, dir),
-        "readTable (planner relation)" -> SnapshotTable.readTable(spark, dir),
         "SQL catalog" -> spark.sql(s"SELECT * FROM snap.mix.t"))) {
       assert(df.schema("i").dataType == LongType, s"$label: i widened")
       assert(df.schema("f").dataType == DoubleType, s"$label: f widened")
