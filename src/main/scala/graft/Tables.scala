@@ -14,8 +14,17 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The fixture `name` under `sfDir`, with its schema read from one footer
+    * on the driver ([[org.apache.spark.sql.graftbridge.Bridge.footerSchema]]):
+    * `spark.read.parquet` would infer the same schema in a one-task Spark
+    * job on every load. A path with no file falls through to Spark's own
+    * read and its error.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    org.apache.spark.sql.graftbridge.Bridge.footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
 
   /** lineitem with `l_shipdate` normalized to DateType. */
   def lineitem(spark: SparkSession, sfDir: String): DataFrame =

@@ -780,7 +780,7 @@ object SnapshotTable {
     * store — [[Manifest.columnMapping]]) and one final aliasing Project
     * restores the logical names; filters and pruning push straight
     * through it. A legacy manifest without a recorded schema reads with
-    * the schema inferred from the footers; an empty entry list with one
+    * the schema of one footer, read on the driver; an empty entry list with one
     * is an ordinary empty table.
     *
     * Deletion vectors apply here and nowhere else in the Scala read path:
@@ -808,8 +808,7 @@ object SnapshotTable {
     val index = new SnapshotFileIndex(spark, dir, m)
     val fileSchema = m.schemaDdl match {
       case Some(ddl) => physicalSchema(StructType.fromDDL(ddl), mapping)
-      case None => new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-        .inferSchema(spark, Map.empty, index.allFiles())
+      case None => org.apache.spark.sql.graftbridge.Bridge.footerSchema(spark, index.allFiles())
         .getOrElse(throw new IllegalStateException(s"cannot infer the schema of $dir"))
     }
     // nullable like every file source's schema: manifests written before
@@ -2478,7 +2477,11 @@ object SnapshotTable {
         if (zorderBy.size == 1) org.apache.spark.sql.functions.col(s"`${zorderBy.head}`")
         else graft.ops.Layout.zClusterKey(base, zorderBy)
       val arranged =
-        if (zorderBy.isEmpty) layout.fold(base.repartition(nOut))(_.apply(base))
+        if (zorderBy.isEmpty) layout.fold(
+          // a partitioned table's files are decided by writeData's rebalance
+          // on the routing columns; a shuffle to nOut before it only moves
+          // the whole table once more
+          if (pcols.nonEmpty) base else base.repartition(nOut))(_.apply(base))
         else if (pcols.nonEmpty) base // ordered inside writeData, post-routing
         else base.withColumn("__zk", zKey)
           .repartitionByRange(nOut, org.apache.spark.sql.functions.col("__zk"))

@@ -16,7 +16,10 @@ import graft.expressions.{CosineSimilarity, HyperplaneSignature, LangIdNgram, Sh
   * - runtime: `GraftExtensions.register(spark)` on an existing session.
   *
   * After either, `cosine_sim(a, b)` resolves in SQL text and via
-  * [[GraftExtensions.cosine_sim]] in the DataFrame API.
+  * [[GraftExtensions.cosine_sim]] in the DataFrame API. Only the config
+  * path installs the adaptive runtime rule
+  * [[graft.plans.SmallSortSinglePartition]]: Spark has no hook that adds
+  * one to a session already built.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -36,6 +39,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.zorderNDescriptor)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     ext.injectOptimizerRule(_ => graft.plans.RowNumberTopKRewrite)
+    ext.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortSinglePartition)
   }
 }
 

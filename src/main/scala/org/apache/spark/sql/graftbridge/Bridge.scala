@@ -37,6 +37,58 @@ object Bridge {
       options = Map.empty)(spark.asInstanceOf[classic.SparkSession]), isStreaming = false))
   }
 
+  /** The schema Spark's non-merging parquet inference gives for `files`,
+    * read from ONE footer on the driver instead of in a one-task job.
+    * Same file choice as `ParquetUtils.inferSchema`: a `_common_metadata`
+    * summary, else a `_metadata` one, else the first data file by path.
+    * Same reading as `ParquetFileFormat.readSchemaFromFooter`: the schema
+    * Spark wrote under its row-metadata key, else the footer's converted
+    * with the flags `mergeSchemasInParallel` takes from the session conf
+    * at call time (so `nanosAsLong` / `inferTimestampNTZ` set just before
+    * apply) and the converter's defaults for the rest. None when there is
+    * no file to read.
+    */
+  def footerSchema(spark: SparkSession, files: Seq[org.apache.hadoop.fs.FileStatus]):
+      Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val summaries = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+    val leaves = files.sortBy(_.getPath.toString)
+    def named(n: String) = leaves.find(_.getPath.getName == n)
+    named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(leaves.find(f => !summaries(f.getPath.getName)))
+      .map { f =>
+        val session = spark.asInstanceOf[classic.SparkSession]
+        val conf = session.sessionState.conf
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, session.sessionState.newHadoopConf()),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = conf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = conf.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
+      }
+  }
+
+  /** [[footerSchema]] of the files a `spark.read.parquet(path)` would list
+    * (Spark's own leaf listing, hidden files filtered); None when `path`
+    * does not exist or holds no file.
+    */
+  def footerSchema(spark: SparkSession, path: String):
+      Option[org.apache.spark.sql.types.StructType] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val session = spark.asInstanceOf[classic.SparkSession]
+    if (!p.getFileSystem(session.sessionState.newHadoopConf()).exists(p)) None
+    else footerSchema(spark, new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+      session, Seq(p), Map.empty, None).allFiles())
+  }
+
   /** The ANALYZED Catalyst condition of `df`'s top-level Filter — the input
     * the manifest-level file skipper walks. Spark 4's classic `Column` is a
     * tree of connect-style ColumnNodes (`UnresolvedFunction(">=", …)`), not

@@ -97,6 +97,25 @@ class PartitionedSnapshotSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, dir).count() == 260)
   }
 
+  test("compacting a partitioned table shuffles the data once and writes one file per value") {
+    val dir = s"$root/scala/compact-once"
+    SnapshotTable.write(spark, df(0, 600).repartition(4), dir, partitionCols = Some(Seq("dt")))
+    SnapshotTable.append(spark, df(600, 900).repartition(3), dir)
+    val before = SnapshotTable.read(spark, dir).collect().map(_.toString).sorted.toSeq
+    val (_, rec) = graft.obs.Recorder.measure(spark)(
+      SnapshotTable.compact(spark, dir, targetBytes = 512L * 1024 * 1024))
+    // the rebalance on the routing column is the only exchange: no
+    // repartition to the output file count ahead of it
+    val exchanges = rec.executions.flatMap(qe => collectAll(qe.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e.shuffleOrigin
+    })
+    assert(exchanges.size == 1, exchanges)
+    val m = SnapshotTable.currentManifest(spark, dir).get
+    assert(m.entries.size == 3, m.entries.map(_.path))
+    assert(m.entries.map(_.stats.get("dt").lo.get).distinct.size == 3)
+    assert(SnapshotTable.read(spark, dir).collect().map(_.toString).sorted.toSeq == before)
+  }
+
   test("a partitioned batch missing its partition column is refused loudly") {
     val dir = s"$root/scala/refuse-missing"
     SnapshotTable.write(spark, df(0, 50), dir, partitionCols = Some(Seq("dt")))
