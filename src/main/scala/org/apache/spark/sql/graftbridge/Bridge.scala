@@ -78,16 +78,13 @@ object Bridge {
 
   /** [[footerSchema]] of the files a `spark.read.parquet(path)` would list
     * (Spark's own leaf listing, hidden files filtered); None when `path`
-    * does not exist or holds no file.
+    * holds no file (the listing of a missing root path is empty).
     */
   def footerSchema(spark: SparkSession, path: String):
-      Option[org.apache.spark.sql.types.StructType] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val session = spark.asInstanceOf[classic.SparkSession]
-    if (!p.getFileSystem(session.sessionState.newHadoopConf()).exists(p)) None
-    else footerSchema(spark, new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-      session, Seq(p), Map.empty, None).allFiles())
-  }
+      Option[org.apache.spark.sql.types.StructType] =
+    footerSchema(spark, new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+      spark.asInstanceOf[classic.SparkSession], Seq(new org.apache.hadoop.fs.Path(path)),
+      Map.empty, None).allFiles())
 
   /** The ANALYZED Catalyst condition of `df`'s top-level Filter — the input
     * the manifest-level file skipper walks. Spark 4's classic `Column` is a

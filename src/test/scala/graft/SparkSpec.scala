@@ -48,7 +48,7 @@ trait SparkSpec extends AnyFunSuite {
     * unsetting) afterwards — never leak conf state into other suites
     * sharing the session.
     */
-  def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
     val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
@@ -68,6 +68,9 @@ object SparkSpec {
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // mirror Sessions.local: specs plan with the engine's own extensions
+      // (native functions, the top-k strategy, the adaptive small-sort rule)
+      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
       // mirror Sessions.local: INT64-micros timestamps so parquet footers
       // carry stats the snapshot layer can prune on
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

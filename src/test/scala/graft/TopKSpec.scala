@@ -20,17 +20,14 @@ class TopKSpec extends SparkSpec {
       .drop("rn")
   }
 
-  /** Evaluate `f` with RowNumberTopKRewrite disabled — the window
+  /** Evaluate `f` with RowNumberTopKRewrite excluded — the window
     * formulation is this suite's REFERENCE, so it must not itself be
-    * rewritten into the operator under test (another suite may have
-    * registered the rule on the shared session).
+    * rewritten into the operator under test (the shared session is built
+    * with the extension, and `GraftExtensions.register` adds the rule
+    * again; the exclusion covers both).
     */
-  private def withoutRewrite[T](f: => T): T = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == graft.plans.RowNumberTopKRewrite)
-    try f finally spark.experimental.extraOptimizations = saved
-  }
+  private def withoutRewrite[T](f: => T): T =
+    withConf("spark.sql.optimizer.excludedRules" -> graft.plans.RowNumberTopKRewrite.ruleName)(f)
 
   test("topKPerKey equals the window row_number formulation exactly") {
     for (k <- Seq(1, 3, 10)) {

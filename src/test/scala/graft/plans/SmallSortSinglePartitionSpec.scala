@@ -1,13 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.extensions.GraftExtensions
 import graft.obs.Recorder
 
 /** A global sort over a finished, small input runs in one partition: two
@@ -15,35 +14,15 @@ import graft.obs.Recorder
   */
 class SmallSortSinglePartitionSpec extends SparkSpec {
 
-  /** The shared test session has no extensions; this one shares its
-    * context and is built with [[GraftExtensions]], as `Sessions.local`
-    * builds every engine session.
+  /** `body` with the rule excluded from the adaptive optimizer (as on a
+    * session without [[graft.extensions.GraftExtensions]]), then with it;
+    * the shared test session is built with the extension.
     */
-  private lazy val graft: SparkSession = {
-    val shared = SparkSpec.session
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
-    finally {
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
-    }
-  }
+  private def withoutAndWith[T](confs: (String, String)*)(body: => T): (T, T) =
+    (withConf(confs :+ noRule: _*)(body), withConf(confs: _*)(body))
 
-  /** `body` with `confs` set on `s`, restored afterwards. */
-  private def under[T](s: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
-    val olds = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
-  /** `body` on the shared session (no rule), then on the rule's session. */
-  private def bothSessions[T](confs: (String, String)*)(body: SparkSession => T): (T, T) =
-    (under(spark, confs)(body(spark)), under(graft, confs)(body(graft)))
+  private val noRule =
+    "spark.sql.adaptive.optimizer.excludedRules" -> SmallSortSinglePartition.ruleName
 
   private val base = Seq("spark.sql.adaptive.enabled" -> "true", "spark.sql.shuffle.partitions" -> "4")
   private val aqeOff = Seq("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "4")
@@ -51,8 +30,8 @@ class SmallSortSinglePartitionSpec extends SparkSpec {
   /** Per-group aggregate with NULL and tied keys: k NULL for every fifth
     * id, j in 0..2.
     */
-  private def grouped(s: SparkSession): DataFrame =
-    s.range(0, 2000, 1, 4)
+  private def grouped: DataFrame =
+    spark.range(0, 2000, 1, 4)
       .select(when(col("id") % 5 === 0, lit(null)).otherwise(col("id") % 7).as("k"),
         (col("id") % 3).as("j"), col("id"))
       .groupBy("k", "j").agg(sum("id").as("s"), count(lit(1)).as("n"))
@@ -62,14 +41,14 @@ class SmallSortSinglePartitionSpec extends SparkSpec {
   }
 
   test("a small groupBy().orderBy() runs 2 jobs instead of 4, with no range exchange") {
-    val ((rowsA, jobsA), (rowsB, jobsB)) = bothSessions(base: _*) { s =>
-      val (rows, rec) = Recorder.measure(s)(grouped(s).orderBy("k", "j").collect())
+    val ((rowsA, jobsA), (rowsB, jobsB)) = withoutAndWith(base: _*) {
+      val (rows, rec) = Recorder.measure(spark)(grouped.orderBy("k", "j").collect())
       (rows.toSeq, rec.jobs.size)
     }
     assert(jobsA == 4, s"without the rule: $jobsA jobs")
     assert(jobsB == 2, s"with the rule: $jobsB jobs")
     assert(rowsB == rowsA)
-    val (planA, planB) = bothSessions(base: _*)(s => executed(grouped(s).orderBy("k", "j")))
+    val (planA, planB) = withoutAndWith(base: _*)(executed(grouped.orderBy("k", "j")))
     assert(rangeExchanges(planA).nonEmpty, planA)
     assert(rangeExchanges(planB).isEmpty, planB)
     assert(collectAll(planB) { case c: CoalesceExec => c }.size == 1, planB)
@@ -83,9 +62,9 @@ class SmallSortSinglePartitionSpec extends SparkSpec {
       "multi-key mixed" -> Seq(col("j").desc, col("k").asc_nulls_last, col("s")),
       "expression key" -> Seq((col("s") % 11).desc, col("k"), col("j")))
     orders.foreach { case (what, order) =>
-      val want = under(spark, aqeOff)(grouped(spark).orderBy(order: _*).collect().toSeq)
-      val (got, plan) = under(graft, base) {
-        val df = grouped(graft).orderBy(order: _*)
+      val want = withConf(aqeOff: _*)(grouped.orderBy(order: _*).collect().toSeq)
+      val (got, plan) = withConf(base: _*) {
+        val df = grouped.orderBy(order: _*)
         (df.collect().toSeq, executed(df))
       }
       assert(got == want, what)
@@ -93,16 +72,16 @@ class SmallSortSinglePartitionSpec extends SparkSpec {
     }
     // ties: only j orders, so rows within a j may come in any order; the
     // key sequence and the row multiset must match
-    val want = under(spark, aqeOff)(grouped(spark).orderBy(col("j").desc).collect().toSeq)
-    val got = under(graft, base)(grouped(graft).orderBy(col("j").desc).collect().toSeq)
+    val want = withConf(aqeOff: _*)(grouped.orderBy(col("j").desc).collect().toSeq)
+    val got = withConf(base: _*)(grouped.orderBy(col("j").desc).collect().toSeq)
     assert(got.map(_.getAs[Long]("j")) == want.map(_.getAs[Long]("j")))
     assert(got.map(_.toString).sorted == want.map(_.toString).sorted)
   }
 
   test("the range exchange stays over a large input, without coalescing, and under a limit") {
-    def shapes(confs: (String, String)*)(q: SparkSession => DataFrame): (SparkPlan, SparkPlan) =
-      bothSessions(base ++ confs: _*)(s => executed(q(s)))
-    val sorted = (s: SparkSession) => grouped(s).orderBy("k", "j")
+    def shapes(confs: (String, String)*)(q: => DataFrame): (SparkPlan, SparkPlan) =
+      withoutAndWith(base ++ confs: _*)(executed(q))
+    def sorted = grouped.orderBy("k", "j")
     // input larger than the (lowered) coalescing threshold
     val (_, big) = shapes("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")(sorted)
     assert(rangeExchanges(big).nonEmpty, big)
@@ -110,24 +89,23 @@ class SmallSortSinglePartitionSpec extends SparkSpec {
     val (_, noCoalesce) = shapes("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(sorted)
     assert(rangeExchanges(noCoalesce).nonEmpty, noCoalesce)
     // AQE off: runtime rules never run
-    val off = under(graft, aqeOff)(executed(sorted(graft)))
+    val off = withConf(aqeOff: _*)(executed(sorted))
     assert(rangeExchanges(off).nonEmpty, off)
     // a limit plans the sort as a top-k; the rule leaves it alone
-    val (limA, limB) = shapes()(s => grouped(s).orderBy("k", "j").limit(3))
+    val (limA, limB) = shapes()(grouped.orderBy("k", "j").limit(3))
     Seq(limA, limB).foreach { p =>
       assert(collectAll(p) { case t: TakeOrderedAndProjectExec => t }.nonEmpty, p)
       assert(collectAll(p) { case c: CoalesceExec => c }.isEmpty, p)
     }
-    val (rowsA, rowsB) = bothSessions(base: _*)(s =>
-      grouped(s).orderBy("k", "j").limit(3).collect().toSeq)
+    val (rowsA, rowsB) = withoutAndWith(base: _*)(grouped.orderBy("k", "j").limit(3).collect().toSeq)
     assert(rowsA == rowsB)
   }
 
   test("a sort over a filtered, projected aggregate is rewritten too, with the same rows") {
-    val q = (s: SparkSession) => grouped(s).filter(col("n") > 0)
+    def q = grouped.filter(col("n") > 0)
       .select(col("k"), (col("s") * 2).as("s2")).orderBy(col("s2").desc)
-    val ((rowsA, planA), (rowsB, planB)) = bothSessions(base: _*) { s =>
-      val df = q(s)
+    val ((rowsA, planA), (rowsB, planB)) = withoutAndWith(base: _*) {
+      val df = q
       (df.collect().toSeq, executed(df))
     }
     assert(rowsA == rowsB)

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Offline differ for two bench artifacts: did the plan change, or only the box?
 
-Usage: python3 tools/bench_diff.py <before.json> <after.json> [--time-threshold 0.10]
+Usage: python3 tools/bench_diff.py <before.json> <after.json>
 
 Takes either two `graft.Bench` detail files (BENCH_DETAIL.json: per-query
 rep seconds and shuffle-byte vectors) or two benchmark artifacts
@@ -20,6 +20,9 @@ import argparse
 import json
 import statistics
 import sys
+
+# relative change above which a row's time counts as moved
+TIME_THRESHOLD = 0.10
 
 
 def load(path):
@@ -62,8 +65,6 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("before")
     ap.add_argument("after")
-    ap.add_argument("--time-threshold", type=float, default=0.10,
-                    help="relative change above which a time counts as moved (default 0.10)")
     a = ap.parse_args()
     (ka, da), (kb, db) = load(a.before), load(a.after)
     if ka != kb:
@@ -77,7 +78,7 @@ def main():
         print("WARNING: the two runs ran different query lists or orders; "
               "shuffle-byte vectors are not comparable across them")
     ra, rb = (bench_rows(da), bench_rows(db)) if ka == "bench" else (perfbench_rows(da), perfbench_rows(db))
-    moved, time_only, same = [], [], []
+    moved, time_only, uncounted, same = [], [], [], []
     for row in sorted(set(ra) | set(rb)):
         if row not in ra or row not in rb:
             print(f"  {row}: only in {'after' if row in rb else 'before'}")
@@ -87,8 +88,8 @@ def main():
         dt = (tb - ta) / ta if ta and tb is not None else 0.0
         if changed:
             moved.append((row, changed, ta, tb))
-        elif abs(dt) > a.time_threshold:
-            time_only.append((row, ta, tb, dt))
+        elif abs(dt) > TIME_THRESHOLD:
+            (time_only if ca or cb else uncounted).append((row, ta, tb, dt))
         else:
             same.append(row)
 
@@ -102,6 +103,11 @@ def main():
     print(f"time only ({len(time_only)}): counters equal, so the box, not the plan")
     for row, ta, tb, dt in time_only:
         print(f"  {row}: {fmt_t(ta)} -> {fmt_t(tb)} ({dt:+.1%})")
+    if uncounted:
+        print(f"time moved, no counters of their own ({len(uncounted)}): "
+              "the 'run' row's counters say whether the plan changed")
+        for row, ta, tb, dt in uncounted:
+            print(f"  {row}: {fmt_t(ta)} -> {fmt_t(tb)} ({dt:+.1%})")
     print(f"unchanged: {len(same)} rows")
 
 
